@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Diagnostic: prints the measured mean recall@k of each approximate
   * top-k variant against the exact result on the sampled query set —
   * the numbers the [[graft.queries.Similarity.annContract]] collapse
@@ -10,12 +9,7 @@ object AnnProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Seq("q41_sim_topk_ivf", "q60_sim_topk_quant",
         "q81_sim_topk_pq", "q82_sim_topk_ivfpq",

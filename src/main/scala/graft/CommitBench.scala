@@ -1,7 +1,6 @@
 package graft
 
 import graft.lake.{CommitStore, JdbcCommitStore, ObjectStoreCommitStore, TxLog}
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Files
 
@@ -89,12 +88,7 @@ object CommitBench {
     // is contention, not checkpoint-landing luck
     val perPhase = args.lift(1).map(_.toInt).getOrElse(64)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val ddl = "id BIGINT,ts DOUBLE,v DOUBLE"

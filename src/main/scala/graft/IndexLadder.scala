@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.lake.TxLog
@@ -33,12 +32,7 @@ object IndexLadder {
       "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_LADDER_COPIES", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // bytes floor off for the ladder: its corpora are MBs — emulate the
     // production bytes-per-file ratio so the files-opened rungs mean

@@ -1,7 +1,6 @@
 package graft
 
 import graft.lake.TxLog
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -46,12 +45,7 @@ object LogBench {
     val nCommits = args.lift(1).map(_.toInt).getOrElse(100)
     val sparse = args.lift(2).contains("sparse")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

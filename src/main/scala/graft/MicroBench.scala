@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Ad-hoc repeat-timing harness for bisecting bench regressions: runs the
   * named queries N times back-to-back each (r3's adjacent-sample shape) and
   * prints every sample, so steady-state plan cost is separable from
@@ -11,12 +10,7 @@ object MicroBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "4").toInt
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.enableHotCache()
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

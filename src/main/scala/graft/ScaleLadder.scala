@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.util.concurrent.atomic.AtomicLong
@@ -53,12 +52,7 @@ object ScaleLadder {
     val copies = sys.env.getOrElse("SPARK_GRAFT_LADDER_COPIES", "10").toInt
     val names = if (args.nonEmpty) args.toSeq else DefaultQueries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.enableHotCache()
 

@@ -34,10 +34,18 @@ import org.apache.spark.sql.SparkSession
   *    1.9 -> 1.45 s (executor run 13.7 -> 2.2 s), q124 5.2 -> 4.6 s.
   */
 object SessionTuning {
-  /** Env overrides (A/B seams; the defaults are the tuned values). */
+  /** `b` with both tuned settings. */
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+    .config("spark.sql.codegen.cache.maxEntries", "10000")
+    .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+
+  /** The tuned builder every harness main and the test session start
+    * from: `local[cpus]` with one shuffle partition per core, the UTC
+    * session zone the fixtures' epoch conversions assume, and no UI.
+    */
+  def local(cpus: String): SparkSession.Builder = apply(SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false"))
 }

@@ -572,10 +572,10 @@ object TxLog {
     * the file (skipping is necessary-condition only) — and so do NaN
     * bounds: Spark's min/max propagate NaN as the largest double, so a
     * single NaN row would otherwise make `mx >= lo` FALSE and silently
-    * skip a file that holds matching rows. Centralized because three
-    * read paths (readRange/readRanges/readStatsPruned) and the merge
-    * probe all prune with it — a divergent copy is a wrong-results bug
-    * waiting to happen.
+    * skip a file that holds matching rows. Centralized because every
+    * pruned read ([[prunedSnapshot]]; [[prunedSnapMeta]] spells it in
+    * SQL) and the merge probe prune with it — a divergent copy is a
+    * wrong-results bug waiting to happen.
     */
   private def boundsKeep(b: Option[(Double, Double)],
                          lo: Double, hi: Double): Boolean = b match {
@@ -3520,34 +3520,21 @@ object TxLog {
     StructType(StructType.fromDDL(ddl).map(_.copy(nullable = true)))
   }
 
-  /** File-skipping read WITHOUT a residual predicate: prune the live set
-    * by committed stats bounds (missing stats keep the file — skipping
-    * is necessary-condition only) and return the surviving files' scan,
-    * applying NO row filter. [[readRange]]/[[readRanges]] bake the range
-    * predicate in; the `format("graft")` scan uses THIS and re-applies
-    * its exact pushed filters itself (strict vs non-strict bounds,
-    * one-sided comparisons — baking `<= Double.MaxValue` in would even
-    * drop +Infinity values).
+  /** Stats-only [[readPrunedScan]]: the surviving files' scan with NO
+    * row filter. [[readRange]]/[[readRanges]] bake the range predicate
+    * in; callers that re-apply their own exact filters (strict vs
+    * non-strict bounds, one-sided comparisons — baking
+    * `<= Double.MaxValue` in would even drop +Infinity values) use this.
     */
   def readStatsPruned(spark: SparkSession, root: String,
                       bounds: Seq[(String, Double, Double)],
                       version: Option[Long] = None): DataFrame =
-    resolveMeta(spark, root, version) match {
-      case Right(m) =>
-        snapshot(spark, root, prunedSnapMeta(spark, root, m, bounds, Nil))
-      case Left(snap) =>
-        val physBounds = bounds.map { case (c, lo, hi) =>
-          (snap.stats.col(physName(snap.colMap, c)), lo, hi)
-        }
-        val keep = snap.live.filter(f =>
-          physBounds.forall { case (cs, lo, hi) => boundsKeep(cs.get(f), lo, hi) })
-        lastStatsPrune = Some((keep.size, snap.live.size))
-        snapshot(spark, root, snap.copy(live = keep))
-    }
+    snapshot(spark, root, prunedSnapshot(spark, root, bounds, Nil, version))
 
-  /** Test seam: (kept, total) of the most recent [[readStatsPruned]] —
-    * file skipping happens before the DataFrame exists, so a plan
-    * assertion can't observe it from the outside.
+  /** Test seam: (kept, total) of the most recent pruned read's stats
+    * tier ([[readPrunedScan]] says when it is set) — file skipping
+    * happens before the DataFrame exists, so a plan assertion can't
+    * observe it from the outside.
     */
   @volatile private[graft] var lastStatsPrune: Option[(Int, Int)] = None
 
@@ -3641,28 +3628,22 @@ object TxLog {
     version.fold(readLatest(spark, root))(readAt(spark, root, _))
       .createOrReplaceTempView(name)
 
-  /** Range read with DATA SKIPPING: files whose committed [min, max] for
-    * `column` cannot intersect [lo, hi] are dropped from the scan's file
-    * list before any IO — the tier between partition pruning (directory
-    * granularity) and parquet row-group stats (needs the footer read).
-    * Files without stats for the column are conservatively kept, so
-    * mixing stats-less commits costs skipping, never rows. The residual
-    * predicate is applied normally on the surviving files.
+  /** Range read with DATA SKIPPING: the one-bound [[readRanges]] —
+    * files whose committed [min, max] for `column` cannot intersect
+    * [lo, hi] are dropped before any IO (the tier between partition
+    * pruning and parquet row-group stats), then the range predicate is
+    * applied on the survivors.
     */
   def readRange(spark: SparkSession, root: String, column: String,
                 lo: Double, hi: Double,
-                version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readStatsPruned(spark, root, Seq((column, lo, hi)), version)
-      .filter(col(column) >= lo && col(column) <= hi)
-  }
+                version: Option[Long] = None): DataFrame =
+    readRanges(spark, root, Seq((column, lo, hi)), version)
 
-  /** Conjunctive multi-column range read: a file survives only if EVERY
-    * bound can intersect its committed stats (missing stats for a column
-    * keep the file — skipping is necessary-condition only). This is what
-    * makes Z-ordered tables ([[clusterZ]]) pay off: after interleaving,
-    * a conjunction over the clustered columns prunes multiplicatively,
-    * where single-column skipping ([[readRange]]) prunes on one axis.
+  /** Conjunctive multi-column range read: [[readStatsPruned]] plus every
+    * bound as a row filter. This is what makes Z-ordered tables
+    * ([[clusterZ]]) pay off: after interleaving, a conjunction over the
+    * clustered columns prunes multiplicatively, where single-column
+    * skipping ([[readRange]]) prunes on one axis.
     */
   def readRanges(spark: SparkSession, root: String,
                  bounds: Seq[(String, Double, Double)],
@@ -4041,15 +4022,14 @@ object TxLog {
   }
 
   /** The files of `snap` that might contain ANY of the probe hashes,
-    * per the column's bloom index; files without an index row (no index
-    * built, or written after the build) are conservatively kept.
+    * per the column's bloom index (callers check the sidecar exists);
+    * files without an index row (written after the build) are
+    * conservatively kept.
     */
   private def bloomKeepFiles(spark: SparkSession, root: String,
                              column: String, probeHashes: Seq[Long],
                              snap: Snapshot): Seq[String] = {
     val dir = bloomDir(root, column)
-    if (!fileSystem(spark, root).exists(dir)) return snap.live
-    import spark.implicits._
     // DERIVED-state read rule: the sidecar has no commit protocol by
     // design, so a read racing a concurrent (re)build can find the dir
     // with only an in-flight _temporary inside (schema inference fails)
@@ -4086,50 +4066,59 @@ object TxLog {
     snap.live.filterNot(rejected.contains)
   }
 
-  /** `xxhash64` of each probe value AS THE COLUMN'S TYPE — computed by a
-    * one-row-per-value Spark job so the probe hash is bit-identical to
-    * what [[buildBloomIndex]] aggregated (values round-trip through a
-    * string cast; atomic column types only, which is what a point lookup
-    * key is).
+  /** `xxhash64` of each probe value AS THE COLUMN'S TYPE, bit-identical
+    * to what [[buildBloomIndex]] aggregated: typed literals cast to the
+    * column type under the session zone and eval mode (a string
+    * round-trip would turn a byte array into `[B@…` and shift a
+    * timestamp by the JVM zone), evaluated directly on the driver — no
+    * plan, no Spark job. A dedup probe carries thousands of values; as
+    * one projection per value the plan alone took about a second.
     */
-  private def probeHashes(spark: SparkSession, column: String,
+  private def probeHashes(spark: SparkSession,
                           dt: org.apache.spark.sql.types.DataType,
                           values: Seq[Any]): Seq[Long] = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    import spark.implicits._
-    values.map(String.valueOf).toDF("__v")
-      .select(xxhash64(col("__v").cast(dt)))
-      .collect().map(_.getLong(0)).toSeq
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal, XxHash64}
+    val conf = spark.sessionState.conf
+    val tz = Some(conf.sessionLocalTimeZone)
+    val mode = EvalMode.fromSQLConf(conf)
+    values.map(v =>
+      new XxHash64(Seq(Cast(Literal(v), dt, tz, mode))).eval()
+        .asInstanceOf[Long])
   }
 
-  /** Point lookup with bloom-filter file skipping: scan only the files
-    * whose bloom filter admits at least one of `values` (plus unindexed
-    * files), then apply the exact IN-filter. Without an index this is
-    * exactly `readLatest.filter(isin)`. No false negatives: bloom "no" is
-    * definitive, so skipping never drops a matching row.
+  /** The bloom tier's probe for one pushed equality, shared by both
+    * pruning tiers: the column's canonical spelling (the sidecar dir is
+    * keyed by it, not by the filter's casing) and the non-null probe
+    * values' hashes — None when the conjunct cannot prune (null-only
+    * values, an unknown or complex-typed column, no sidecar).
+    */
+  private def bloomProbe(spark: SparkSession, root: String,
+                         schema: StructType, column: String,
+                         values0: Seq[Any]): Option[(String, Seq[Long])] = {
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    val values = values0.filter(_ != null)
+    schema.find(_.name.equalsIgnoreCase(column))
+      .filter(f => values.nonEmpty &&
+        !f.dataType.isInstanceOf[StructType] &&
+        !f.dataType.isInstanceOf[ArrayType] &&
+        !f.dataType.isInstanceOf[MapType] &&
+        fileSystem(spark, root).exists(bloomDir(root, f.name)))
+      .map(f => (f.name, probeHashes(spark, f.dataType, values)))
+  }
+
+  /** Point lookup with bloom-filter file skipping: the equality-only
+    * [[readPrunedScan]] plus the exact IN-filter. Without an index this
+    * is exactly `readLatest.filter(isin)`.
     */
   def readEquals(spark: SparkSession, root: String, column: String,
                  values: Seq[Any],
                  version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(values.nonEmpty, "readEquals needs at least one probe value")
-    resolveMeta(spark, root, version) match {
-      case Right(m) =>
-        StructType.fromDDL(m.schemaDdl).find(_.name == column)
-          .getOrElse(throw new IllegalArgumentException(s"no column $column"))
-        snapshot(spark, root,
-            prunedSnapMeta(spark, root, m, Nil, Seq(column -> values)))
-          .filter(col(column).isin(values: _*))
-      case Left(snap) =>
-        val dt = StructType.fromDDL(snap.schemaDdl)
-          .find(_.name == column)
-          .getOrElse(throw new IllegalArgumentException(s"no column $column"))
-          .dataType
-        val kept = bloomKeepFiles(spark, root, column,
-          probeHashes(spark, column, dt, values), snap)
-        snapshot(spark, root, snap.copy(live = kept))
-          .filter(col(column).isin(values: _*))
-    }
+    val snap = prunedSnapshot(spark, root, Nil, Seq(column -> values), version)
+    if (!StructType.fromDDL(snap.schemaDdl).exists(_.name == column))
+      throw new IllegalArgumentException(s"no column $column")
+    snapshot(spark, root, snap).filter(col(column).isin(values: _*))
   }
 
   /** Count of files a [[readEquals]] for `values` would scan — exposed so
@@ -4137,26 +4126,32 @@ object TxLog {
     */
   def bloomScanFileCount(spark: SparkSession, root: String, column: String,
                          values: Seq[Any],
-                         version: Option[Long] = None): Int = {
-    val snap = resolve(spark, root, version)
-    val dt = StructType.fromDDL(snap.schemaDdl)(column).dataType
-    bloomKeepFiles(spark, root, column,
-      probeHashes(spark, column, dt, values), snap).size
-  }
+                         version: Option[Long] = None): Int =
+    prunedSnapshot(spark, root, Nil, Seq(column -> values), version).live.size
 
-  /** Connector scan entry ([[graft.lake.GraftTableProvider]]): ONE
-    * snapshot resolution feeding BOTH file-skipping tiers, composed as
-    * necessary conditions — committed min/max stats narrow the live set
-    * by the pushed numeric `bounds` (same keep rule as
-    * [[readStatsPruned]]), then each pushed equality/IN conjunct on a
-    * bloom-indexed column drops the files whose filter rejects every
-    * probe value (same no-false-negative rule as [[readEquals]]). NO row
-    * filter is applied — the connector re-applies its exact pushed
-    * filters, so widened bounds and bloom false positives only cost
-    * scanned files, never rows. Conjuncts on unindexed or complex-typed
-    * columns, and null probe values, contribute no pruning (conservative
-    * keep); each tier can only REMOVE files, so the tiers compose in any
-    * order and with any subset present.
+  /** THE pruned read ([[graft.lake.GraftTableProvider]]'s scan): one
+    * snapshot resolution feeding both file-skipping tiers, composed as
+    * necessary conditions, with NO row filter — the caller re-applies
+    * its exact predicates, so widened bounds and bloom false positives
+    * only cost scanned files, never rows. [[readStatsPruned]],
+    * [[readRange]], [[readRanges]], [[readEquals]],
+    * [[bloomScanFileCount]] and [[plannedScanSizes]] are this file
+    * selection plus their own filter or measure.
+    *
+    *  - Stats tier: committed min/max narrow the live set by `bounds`
+    *    ([[boundsKeep]]: missing or NaN stats keep the file).
+    *  - Bloom tier: each equality/IN conjunct on a bloom-indexed column
+    *    drops the files whose filter rejects every non-null probe value;
+    *    files without an index row are kept. Unindexed or complex-typed
+    *    columns and null-only probes prune nothing. Each tier only
+    *    REMOVES files, so they compose in any order and subset.
+    *  - Where: a table whose checkpoint records more live files than
+    *    `spark.graft.meta.distributedThreshold` prunes distributed over
+    *    the checkpoint rows ([[prunedSnapMeta]]) and collects only the
+    *    survivors; any other prunes its resolved live set on the driver.
+    *  - Seams: [[lastStatsPrune]] is set when `bounds` is non-empty or
+    *    there are no equalities, [[lastBloomPrune]] whenever there are
+    *    equalities.
     */
   def readPrunedScan(spark: SparkSession, root: String,
                      bounds: Seq[(String, Double, Double)],
@@ -4165,11 +4160,11 @@ object TxLog {
     snapshot(spark, root,
       prunedSnapshot(spark, root, bounds, equalities, version))
 
-  /** Planned post-pruning scan bytes of a pruned read — what the scan
-    * budget charges a commit-log table scan ([[graft.plans.ScanBudget]]):
-    * the surviving files' committed sizes after the same stats + bloom
-    * tiers [[readPrunedScan]] applies, no data touched. (Sizes fall back
-    * to one listing per live directory on pre-size-stat tables.)
+  /** Planned post-pruning scan bytes of a [[readPrunedScan]] — what the
+    * scan budget charges a commit-log table scan
+    * ([[graft.plans.ScanBudget]]): the surviving files' committed sizes,
+    * no data touched. (Sizes fall back to one listing per live
+    * directory on pre-size-stat tables.)
     */
   def plannedScanSizes(spark: SparkSession, root: String,
                        bounds: Seq[(String, Double, Double)],
@@ -4179,11 +4174,13 @@ object TxLog {
       prunedSnapshot(spark, root, bounds, equalities, version))
       .map(_._2).sum
 
+  /** The files a [[readPrunedScan]] opens — the one place that chooses
+    * them, on whichever tier the resolve lands.
+    */
   private def prunedSnapshot(spark: SparkSession, root: String,
                              bounds: Seq[(String, Double, Double)],
                              equalities: Seq[(String, Seq[Any])],
                              version: Option[Long]): Snapshot = {
-    import org.apache.spark.sql.types.{ArrayType, MapType}
     val snap = resolveMeta(spark, root, version) match {
       case Right(m) =>
         return prunedSnapMeta(spark, root, m, bounds, equalities)
@@ -4195,24 +4192,12 @@ object TxLog {
     }
     val statsKept = snap.live.filter(f =>
       physBounds.forall { case (cs, lo, hi) => boundsKeep(cs.get(f), lo, hi) })
-    if (bounds.nonEmpty) lastStatsPrune = Some((statsKept.size, snap.live.size))
-    val fs = fileSystem(spark, root)
-    val kept = equalities.foldLeft(statsKept) { case (live, (c, values0)) =>
-      val values = values0.filter(_ != null)
-      schema.find(_.name.equalsIgnoreCase(c)) match {
-        // the sidecar dir is keyed by the schema's canonical spelling
-        // (buildBloomIndex); probe under it, not the filter's casing.
-        // Complex types never round-trip through probeHashes' string
-        // cast — and never arrive as pushed equality values anyway.
-        case Some(f) if values.nonEmpty &&
-            !f.dataType.isInstanceOf[StructType] &&
-            !f.dataType.isInstanceOf[ArrayType] &&
-            !f.dataType.isInstanceOf[MapType] &&
-            fs.exists(bloomDir(root, f.name)) =>
-          bloomKeepFiles(spark, root, f.name,
-            probeHashes(spark, f.name, f.dataType, values),
-            snap.copy(live = live))
-        case _ => live
+    if (bounds.nonEmpty || equalities.isEmpty)
+      lastStatsPrune = Some((statsKept.size, snap.live.size))
+    val kept = equalities.foldLeft(statsKept) { case (live, (c, values)) =>
+      bloomProbe(spark, root, schema, c, values).fold(live) {
+        case (name, hashes) =>
+          bloomKeepFiles(spark, root, name, hashes, snap.copy(live = live))
       }
     }
     if (equalities.nonEmpty) lastBloomPrune = Some((kept.size, statsKept.size))
@@ -5208,7 +5193,7 @@ object TxLog {
     (files, base.size.toLong + deadInBase)
   }
 
-  /** Distributed twin of the stats+bloom pruned read paths: evaluate
+  /** Distributed twin of [[prunedSnapshot]]'s driver tier: evaluate
     * the bounds-keep predicate (the SQL spelling of [[boundsKeep]],
     * null/NaN keep included) and the bloom rejections ON the checkpoint
     * rows, and collect only the SURVIVORS — plus the driver-evaluated
@@ -5245,48 +5230,27 @@ object TxLog {
     val total = m.ckptLiveCount - touchedInBase + touchedLive.size
     // the bloom tier runs DISTRIBUTED, before any collect: for a pure
     // point lookup (no bounds) the stats tier keeps everything, and
-    // collecting it first would re-materialize the full live set.
-    // Separating the two tiers' seam counts costs one extra pass over
-    // the checkpoint rows that only the parity spec reads — gated off
-    // in production (the seams then report the COMPOSED kept count)
-    val statsKeptN: Option[Long] =
-      if (equalities.nonEmpty && spark.conf
-          .get("spark.graft.meta.pruneSeams", "false").trim
-          .equalsIgnoreCase("true"))
-        Some(afterBounds.count())
-      else None
-    import org.apache.spark.sql.types.{ArrayType, MapType}
-    val fs = fileSystem(spark, root)
+    // collecting it first would re-materialize the full live set. So
+    // the seams report the COMPOSED kept count (one collect, no count
+    // pass per tier)
     val afterBloom = equalities.foldLeft(afterBounds) {
-      case (df, (c, values0)) =>
-        val values = values0.filter(_ != null)
-        schema.find(_.name.equalsIgnoreCase(c)) match {
-          case Some(f) if values.nonEmpty &&
-              !f.dataType.isInstanceOf[StructType] &&
-              !f.dataType.isInstanceOf[ArrayType] &&
-              !f.dataType.isInstanceOf[MapType] &&
-              fs.exists(bloomDir(root, f.name)) =>
+      case (df, (c, values)) =>
+        bloomProbe(spark, root, schema, c, values).fold(df) {
+          case (name, hashes) =>
             // same derived-state read rule as bloomKeepFiles: a sidecar
             // mid-(re)build reads conservative, never fails the query
-            try bloomFilterDF(spark, root, f.name,
-              probeHashes(spark, f.name, f.dataType, values).toArray, df)
+            try bloomFilterDF(spark, root, name, hashes.toArray, df)
             catch { case scala.util.control.NonFatal(_) => df }
-          case _ => df
         }
     }
     val rows =
       if (equalities.nonEmpty) withBloomReadBatch(spark)(afterBloom.collect())
       else afterBloom.collect()
-    // seam gating mirrors the classic paths: readStatsPruned sets the
-    // stats seam even for empty bounds, the equality paths never do
+    val kept = rows.length + touchedKept.size
+    // same gating as the driver tier (see readPrunedScan)
     if (bounds.nonEmpty || equalities.isEmpty)
-      lastStatsPrune = Some((
-        (statsKeptN.getOrElse(rows.length.toLong) + touchedKept.size).toInt,
-        total.toInt))
-    if (equalities.nonEmpty)
-      lastBloomPrune = Some((rows.length + touchedKept.size,
-        (statsKeptN.getOrElse(total - touchedKept.size) +
-          touchedKept.size).toInt))
+      lastStatsPrune = Some((kept, total.toInt))
+    if (equalities.nonEmpty) lastBloomPrune = Some((kept, total.toInt))
     val live = rows.map(_.getAs[String]("file")).toSeq ++
       touchedKept.map(_.file)
     val dvs = (rows.flatMap { r =>

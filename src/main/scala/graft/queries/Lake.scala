@@ -1353,7 +1353,7 @@ object Lake {
     // snapshot reached through Spark's connector surface — schema
     // inference without a scan, pushed filters re-applied exactly, and
     // stats-tier FILE skipping driven by the pushed numeric bounds
-    // (GraftDataSource.boundsOf -> TxLog.readStatsPruned). Four disjoint
+    // (GraftDataSource.boundsOf -> TxLog.readPrunedScan). Four disjoint
     // key-slice commits make the skipping real (the filter's window
     // intersects a strict subset of files); the oracle pins that the
     // connector path loses and invents nothing vs the native reader.

@@ -16,13 +16,7 @@ object SparkSpec {
     // harness mains ship with (codegen cache, shuffle writer), both so
     // the suite validates that configuration and because the fixed-cost
     // fixes cut suite wall time too
-    val s = SessionTuning(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      ).getOrCreate()
+    val s = SessionTuning.local("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

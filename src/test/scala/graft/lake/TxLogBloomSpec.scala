@@ -146,6 +146,42 @@ class TxLogBloomSpec extends SparkSpec {
     TxLog.bloomScanFileCount(spark, root, "id", Seq(152L)) should be <= 2
   }
 
+  test("binary key probes hash the bytes, not the array's string form") {
+    val root = Files.createTempDirectory("txbloombin").toString + "/t"
+    (0 until 3).foreach { c =>
+      TxLog.append(spark,
+        (0 until 50).map(i => (Array[Byte](c.toByte, i.toByte), c))
+          .toDF("k", "commit").repartition(1), root)
+    }
+    TxLog.buildBloomIndex(spark, root, "k", expectedKeysPerFile = 100)
+    val probe = Array[Byte](2, 7)
+    TxLog.readEquals(spark, root, "k", Seq(probe))
+      .select("commit").as[Int].collect() shouldBe Array(2)
+    TxLog.bloomScanFileCount(spark, root, "k", Seq(probe)) should
+      (be >= 1 and be <= 2)
+    spark.read.format("graft").load(root).filter(col("k") === probe)
+      .count() shouldBe 1L
+  }
+
+  test("timestamp key probes do not depend on the JVM default zone") {
+    val saved = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(
+      java.util.TimeZone.getTimeZone("America/New_York"))
+    try {
+      val root = Files.createTempDirectory("txbloomts").toString + "/t"
+      def ts(c: Int, i: Int) =
+        new java.sql.Timestamp(1700000000000L + (c * 50 + i) * 60000L)
+      (0 until 3).foreach { c =>
+        TxLog.append(spark,
+          (0 until 50).map(i => (ts(c, i), c))
+            .toDF("k", "commit").repartition(1), root)
+      }
+      TxLog.buildBloomIndex(spark, root, "k", expectedKeysPerFile = 100)
+      TxLog.readEquals(spark, root, "k", Seq(ts(2, 7)))
+        .select("commit").as[Int].collect() shouldBe Array(2)
+    } finally java.util.TimeZone.setDefault(saved)
+  }
+
   test("merge through a bloom-indexed key stays exact") {
     val (root, firstKeys) = freshTable()
     TxLog.buildBloomIndex(spark, root, "k", expectedKeysPerFile = 1000)

@@ -127,8 +127,10 @@ class TxLogMetaDistribSpec extends SparkSpec {
     }
     TxLog.buildBloomIndex(spark, root, "k", expectedKeysPerFile = 1000L)
     TxLog.checkpoint(spark, root) shouldBe Some(3L)
+    TxLog.lastBloomPrune = None
     val classic = TxLog.readEquals(spark, root, "k", Seq(217L))
       .collect().toSeq
+    val classicPrune = TxLog.lastBloomPrune
     val dist = distributed {
       val r = TxLog.readEquals(spark, root, "k", Seq(217L)).collect().toSeq
       TxLog.lastResolveDistributed shouldBe true
@@ -137,10 +139,24 @@ class TxLogMetaDistribSpec extends SparkSpec {
     dist shouldBe classic
     dist.map(_.getLong(0)) shouldBe Seq(217L)
     // the point lookup scanned ~1 of 4 files (bloom false positives may
-    // keep an extra), never the whole set
+    // keep an extra), never the whole set — and both tiers say so
+    TxLog.lastBloomPrune shouldBe classicPrune
     val (kept, candidates) = TxLog.lastBloomPrune.get
     candidates shouldBe 4
     kept should be < 4
+    // the file count and the planned bytes are the same file selection
+    val probe = Seq("k" -> Seq[Any](217L))
+    val classicFiles = TxLog.bloomScanFileCount(spark, root, "k", Seq(217L))
+    val classicBytes = TxLog.plannedScanSizes(spark, root, Nil, probe)
+    distributed {
+      TxLog.bloomScanFileCount(spark, root, "k", Seq(217L)) shouldBe
+        classicFiles
+      TxLog.lastResolveDistributed shouldBe true
+      TxLog.plannedScanSizes(spark, root, Nil, probe) shouldBe classicBytes
+      TxLog.lastResolveDistributed shouldBe true
+    }
+    classicFiles shouldBe kept
+    classicBytes should be > 0L
   }
 
   test("a tail OVERWRITE above the checkpoint (every base file touched) " +
