@@ -126,26 +126,13 @@ private[graft] object GraftDmlStrategy extends SparkStrategy {
       keyName(a.key, "UPDATE SET") -> unresolve(a.value, "UPDATE SET")
     }.toMap
     require(set.size == u.assignments.size, "duplicate SET column in UPDATE")
-    spark.conf.getOption("spark.graft.update.mode").getOrElse("rewrite") match {
-      case "vector"  =>
-        TxLog.updateVectored(spark, t.txRoot, cond, set, t.txStatsCols)
-      case "rewrite" =>
-        TxLog.update(spark, t.txRoot, cond, set, t.txStatsCols)
-      case other => throw new IllegalArgumentException(
-        s"unknown spark.graft.update.mode '$other' (rewrite|vector)")
-    }
+    TxLog.sqlUpdate(spark, t.txRoot, cond, set, t.txStatsCols)
   }
 
   private def runDelete(spark: SparkSession, t: GraftCatalogTable,
-                        d: DeleteFromTable): Long = {
-    val cond = unresolve(d.condition, "DELETE WHERE")
-    spark.conf.getOption("spark.graft.delete.mode").getOrElse("rewrite") match {
-      case "vector"  => TxLog.deleteVectored(spark, t.txRoot, cond)
-      case "rewrite" => TxLog.delete(spark, t.txRoot, cond, t.txStatsCols)
-      case other => throw new IllegalArgumentException(
-        s"unknown spark.graft.delete.mode '$other' (rewrite|vector)")
-    }
-  }
+                        d: DeleteFromTable): Long =
+    TxLog.sqlDelete(spark, t.txRoot, unresolve(d.condition, "DELETE WHERE"),
+      t.txStatsCols)
 
   private def runMerge(spark: SparkSession, t: GraftCatalogTable,
                        m: MergeIntoTable): Long = {

@@ -1255,7 +1255,8 @@ object TxLog {
                          renames: Option[Map[String, String]] = None,
                          mappingFence: Option[(Map[String, String], Seq[String])] = None,
                          consFence: Option[Map[String, String]] = None,
-                         txnFence: Boolean = true): Long = {
+                         txnFence: Boolean = true,
+                         basedOn: Option[Long] = None): Long = {
     val fs = fileSystem(spark, root)
     // parse the auto-truncation config BEFORE any claim: a malformed
     // value must fail the write while nothing is durable — thrown after
@@ -1389,7 +1390,7 @@ object TxLog {
             .foreach(w => throw new AlreadyCommitted(w))
         }
         // Stage-vs-rename/overwrite/rollback fence for paths WITHOUT a
-        // stale-base version check (the append family): the staged files
+        // `basedOn` stale-base fence (the append family): the staged files
         // carry the physical names of `stagedMap`; if any batch column's
         // physical name DIFFERS under the winning state's mapping, the
         // files would read wrong (renamed columns all-NULL) — refuse,
@@ -1408,19 +1409,19 @@ object TxLog {
                 "ROLLBACK): the staged files carry the old physical " +
                 "names — re-run the write")
         }
-        // Constraint fence for the write paths whose delta does NOT
-        // already fail on any concurrent commit (the append family,
-        // overwrite, partition upserts/overwrites): the batch was
-        // validated against a constraint SET; if the winning state's set
-        // differs, the validation is stale — a batch staged before a
+        // Constraint fence for the write paths WITHOUT a `basedOn`
+        // stale-base fence (the append family, overwrite, partition
+        // upserts/overwrites): the batch was validated against a
+        // constraint SET; if the winning state's set differs, the
+        // validation is stale — a batch staged before a
         // concurrent addConstraint would commit violating rows right
         // past the fresh rule. Compared by VALUE against the resolved
         // snapshot, not scanned as events in `commits`: the raw tail is
         // checkpoint-bounded, so a constraint change landing just below
         // a cadence checkpoint would be invisible to an event scan —
-        // the snapshot's constraint set can never hide. (merge/UPDATE/
-        // replaceWhere need no fence — their stale-base detection
-        // already rejects EVERY concurrent commit.)
+        // the snapshot's constraint set can never hide. (The `basedOn`
+        // callers need no fence — their stale-base fence already
+        // rejects EVERY concurrent commit.)
         consFence.foreach { enforced =>
           val now = snapNow.map(_.constraints)
             .getOrElse(Map.empty[String, String])
@@ -1435,6 +1436,23 @@ object TxLog {
         val (add, remove, schemaDdl) =
           try {
             snapNow.foreach(commitScalars.set)
+            // Stale-base (write-skew) fence of the read-modify-write
+            // operations: their delta was computed against version
+            // `base`, so ANY commit that landed since may hold rows the
+            // computation never saw (a concurrent append of a matched
+            // key, a rewrite of a vectored file, an evolved schema the
+            // DDL would clobber). Fail and let the caller re-run against
+            // the new state; silent last-writer-wins would lose the
+            // concurrent writer's rows. Read through tailVersion under
+            // the scalars just set — see its note on why the max.
+            basedOn.foreach { base =>
+              val tail = tailVersion(spark, root, commits)
+              if (tail != Some(base))
+                throw new java.util.ConcurrentModificationException(
+                  s"$operation based on version $base conflicts with " +
+                    s"concurrent commit ${tail.getOrElse("(none)")} at " +
+                    s"$root — re-run the $operation")
+            }
             delta(commits, () => liveNow)
           } finally commitScalars.remove()
         val c = Commit(version, operation, System.currentTimeMillis(),
@@ -1997,7 +2015,7 @@ object TxLog {
   def replaceWhere(spark: SparkSession, df: DataFrame, root: String,
                    condition: org.apache.spark.sql.Column,
                    statsCols: Seq[String] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val escaped =
       df.filter(not(coalesce(condition, lit(false)))).limit(1).count()
     if (escaped > 0)
@@ -2006,13 +2024,9 @@ object TxLog {
           s"condition — filter the batch or widen the condition")
     val current = resolve(spark, root, None)
     val parts = partitionColsOf(spark, root, current)
-    val liveSet = current.live.toSet
-    val matchedFiles = taggedVisible(spark, root, current)
-      .filter(condition)
-      .select("__dv_file").distinct().collect()
-      .map(r => decodeRel(r.getString(0)))
-      .filter(liveSet.contains)
-      .toSeq
+    val matchedFiles = liveMatchCounts(current, "replace_where",
+      taggedVisible(spark, root, current).filter(condition)
+        .select(col("__dv_file").as("file"))).map(_._1)
     // survivors: matched files' rows the condition does NOT select (NULL
     // keeps the row — DELETE semantics), carried over verbatim; DV-aware
     // so vector-deleted rows don't resurrect through the rewrite
@@ -2029,16 +2043,12 @@ object TxLog {
       colMap = current.colMap)
     enforceConstraints(spark, root, adds, ddl, "replace_where")
     commitLoop(spark, root, "replace_where", parts, { (commits, _) =>
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"replaceWhere based on version ${current.version} conflicts " +
-            s"with concurrent commit " +
-            s"${commits.lastOption.map(_.version).orNull} at $root — re-run")
       // append-style schema merge: a zero-match replaceWhere staging a
       // narrower batch must NOT narrow the committed table schema
       (adds, matchedFiles,
         committedDdl(spark, commits, ddl, "replace_where", root))
-    }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes))
+    }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
+      basedOn = Some(current.version))
   }
 
   // -------------------------------------------------------------------
@@ -2065,15 +2075,6 @@ object TxLog {
     */
   def constraintsOf(spark: SparkSession, root: String): Map[String, String] =
     resolve(spark, root, None).constraints
-
-  /** The current logical -> physical (on-file) column mapping: entries
-    * exist only for renamed columns ([[renameColumn]]); empty for a
-    * never-renamed table or after an OVERWRITE cleared it. DESCRIBE
-    * DETAIL's `column_mapping` field and the introspection hook for
-    * tooling that reads data files directly.
-    */
-  def columnMapping(spark: SparkSession, root: String): Map[String, String] =
-    resolve(spark, root, None).colMap
 
   /** Violation filter implementing SQL CHECK semantics: a row violates
     * only when the expression is FALSE — NULL satisfies (the standard,
@@ -2117,16 +2118,12 @@ object TxLog {
         s"cannot add constraint $name to $root: $violations existing " +
           s"row(s) violate CHECK ($checkSql)")
     commitLoop(spark, root, "addConstraint",
-      partitionColsOf(spark, root, current), { (commits, _) =>
-        // any commit after the validation scan may have added rows this
-        // constraint never saw — fail the add, not the data
-        if (tailVersion(spark, root, commits) != Some(current.version))
-          throw new java.util.ConcurrentModificationException(
-            s"addConstraint($name) validated version ${current.version} " +
-              s"but ${commits.lastOption.map(_.version).orNull} committed " +
-              s"since at $root — re-run")
-        (Seq.empty, Seq.empty, current.schemaDdl)
-      }, consAdd = Map(name -> checkSql))
+      partitionColsOf(spark, root, current),
+      (_, _) => (Seq.empty, Seq.empty, current.schemaDdl),
+      consAdd = Map(name -> checkSql),
+      // any commit after the validation scan may have added rows this
+      // constraint never saw — fail the add, not the data
+      basedOn = Some(current.version))
   }
 
   /** Detach a constraint; later writes stop checking it. */
@@ -2192,18 +2189,13 @@ object TxLog {
       f -> (curStats.getOrElse(f, Map.empty[String, (Double, Double)]) ++ m)
     }
     commitLoop(spark, root, "analyze",
-      partitionColsOf(spark, root, current), { (commits, _) =>
-        // the scan covered `current`'s live set; files committed since
-        // weren't analyzed and a raced evolution must not be clobbered
-        // by this commit's schema echo — fail the maintenance op, not
-        // the data, and let the caller re-run
-        if (tailVersion(spark, root, commits) != Some(current.version))
-          throw new java.util.ConcurrentModificationException(
-            s"analyze scanned version ${current.version} but " +
-              s"${commits.lastOption.map(_.version).orNull} committed " +
-              s"since at $root — re-run")
-        (Seq.empty, Seq.empty, current.schemaDdl)
-      }, stats = merged)
+      partitionColsOf(spark, root, current),
+      (_, _) => (Seq.empty, Seq.empty, current.schemaDdl), stats = merged,
+      // the scan covered `current`'s live set; files committed since
+      // weren't analyzed and a raced evolution must not be clobbered
+      // by this commit's schema echo — fail the maintenance op, not
+      // the data, and let the caller re-run
+      basedOn = Some(current.version))
   }
 
   /** Distinct partition directory paths of the CURRENT live set (Hive
@@ -2265,17 +2257,12 @@ object TxLog {
       acc.add(StructField(n, dt))
     }
     commitLoop(spark, root, "addColumns",
-      partitionColsOf(spark, root, current), { (commits, _) =>
-        // the widened DDL was computed against `current`; a write racing
-        // in between may itself have evolved the schema — fail the DDL,
-        // not the data, and let the caller re-run against the new state
-        if (tailVersion(spark, root, commits) != Some(current.version))
-          throw new java.util.ConcurrentModificationException(
-            s"addColumns evolved from version ${current.version} but " +
-              s"${commits.lastOption.map(_.version).orNull} committed " +
-              s"since at $root — re-run")
-        (Seq.empty, Seq.empty, evolved.toDDL)
-      })
+      partitionColsOf(spark, root, current),
+      (_, _) => (Seq.empty, Seq.empty, evolved.toDDL),
+      // the widened DDL was computed against `current`; a write racing
+      // in between may itself have evolved the schema — fail the DDL,
+      // not the data, and let the caller re-run against the new state
+      basedOn = Some(current.version))
   }
 
   /** `ALTER TABLE ... DROP COLUMN(S)` as a METADATA-ONLY commit: the new
@@ -2330,21 +2317,17 @@ object TxLog {
     // directory names, so a partition-only schema has no file contents
     require(remaining.exists(f => !partSet(lc(f.name))),
       s"cannot drop every data column of $root")
-    val v = commitLoop(spark, root, "drop_column", parts, { (commits, _) =>
-      // the narrowed DDL was computed against `current`; a racing write
-      // may have evolved the schema — fail the DDL, not the data
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"dropColumns computed from version ${current.version} but " +
-            s"${commits.lastOption.map(_.version).orNull} committed " +
-            s"since at $root — re-run")
-      (Seq.empty, Seq.empty, remaining.toDDL)
+    val v = commitLoop(spark, root, "drop_column", parts,
+      (_, _) => (Seq.empty, Seq.empty, remaining.toDDL),
       // the tombstone names the PHYSICAL column — that is where the
       // stale bytes live (for a renamed column the logical name has no
       // bytes anywhere, so reusing it later is safe); the mapping drops
       // its entry for the dropped logical name
-    }, schemaDrop = canonical.map(c => physName(current.colMap, c)),
-      renames = Some(current.colMap -- dropSet))
+      schemaDrop = canonical.map(c => physName(current.colMap, c)),
+      renames = Some(current.colMap -- dropSet),
+      // the narrowed DDL was computed against `current`; a racing write
+      // may have evolved the schema — fail the DDL, not the data
+      basedOn = Some(current.version))
     canonical.foreach(c =>
       try dropBloomIndex(spark, root, c)
       catch { case _: IOException => () })
@@ -2432,16 +2415,8 @@ object TxLog {
     // fenceBloomType no longer finds the old name in the schema.)
     mustDropBloomIndexes(spark, root, field.name)
     mustDropBloomIndexes(spark, root, to)
-    val v = commitLoop(spark, root, "rename_column", parts, { (commits, _) =>
-      // metadata-only DDL computed against `current`: same stale-base
-      // rule as addColumns/dropColumns — fail the DDL, not the data
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"renameColumn computed from version ${current.version} but " +
-            s"${commits.lastOption.map(_.version).orNull} committed " +
-            s"since at $root — re-run")
-      (Seq.empty, Seq.empty, renamed.toDDL)
-    }, schemaDrop =
+    val v = commitLoop(spark, root, "rename_column", parts,
+      (_, _) => (Seq.empty, Seq.empty, renamed.toDDL), schemaDrop =
         // the tombstone guards BYTE resurrection, so it names only a
         // retired name that IS the frozen physical name (the first
         // rename of a lineage — every file holds its bytes). A
@@ -2457,7 +2432,10 @@ object TxLog {
              lcol(field.name) != lcol(phys)) Seq.empty
          else Seq(field.name)),
       renames = Some(newMap),
-      metrics = Map("num_renamed_columns" -> 1L))
+      metrics = Map("num_renamed_columns" -> 1L),
+      // metadata-only DDL computed against `current`: same stale-base
+      // rule as addColumns/dropColumns — fail the DDL, not the data
+      basedOn = Some(current.version))
     // POST-claim re-drop (OLD name only) closes the other ordering of
     // the build race: a build whose sidecar write landed after the
     // pre-claim drop but whose fence resolved BEFORE this commit (old
@@ -2522,14 +2500,10 @@ object TxLog {
     val evolved = StructType(cur.map(f =>
       if (f.name.equalsIgnoreCase(field.name)) f.copy(dataType = target)
       else f))
-    commitLoop(spark, root, "alter_column_type", parts, { (commits, _) =>
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"alterColumnType computed from version ${current.version} " +
-            s"but ${commits.lastOption.map(_.version).orNull} committed " +
-            s"since at $root — re-run")
-      (Seq.empty, Seq.empty, evolved.toDDL)
-    }, metrics = Map("num_altered_columns" -> 1L))
+    commitLoop(spark, root, "alter_column_type", parts,
+      (_, _) => (Seq.empty, Seq.empty, evolved.toDDL),
+      metrics = Map("num_altered_columns" -> 1L),
+      basedOn = Some(current.version))
   }
 
   /** Enforce the table's constraints on freshly STAGED files, between
@@ -2777,26 +2751,25 @@ object TxLog {
     // rows' positions and append the updates — the CDC-merge shape at
     // 100 TB, where a handful of changed keys per 1 GB file would
     // otherwise re-encode the world. Same pruned probe scan; the
-    // rewrite machinery below is simply skipped. Validated like the
-    // SQL-layer delete/update modes: a typo'd value must not silently
-    // buy the full-rewrite cost the mode exists to avoid.
-    spark.conf.getOption("spark.graft.merge.mode").getOrElse("rewrite") match {
-      case "vector" =>
-        return mergeVectoredTail(spark, root, current, snap, keys, keyCols,
-          updates, partitionCols, statsCols, operation, noUpserts,
-          extraMetrics)
-      case "rewrite" => ()
-      case other => throw new IllegalArgumentException(
-        s"unknown spark.graft.merge.mode '$other' (rewrite|vector)")
+    // rewrite machinery below is simply skipped. The matched keys'
+    // current rows become vector positions (old images) and the updates
+    // append in the same commit; unmatched update keys simply insert,
+    // and a delete-only batch vectors without staging anything.
+    if (vectorMode(spark, "spark.graft.merge.mode")) {
+      val matched = snap.join(keys, keyCols, "left_semi")
+        .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+        .cache()
+      return try commitVectored(spark, root, current, operation,
+        partitionCols, matched, if (noUpserts) None else Some(updates),
+        statsCols, skipIfUnmatched = noUpserts,
+        (rows, _, added) => extraMetrics ++
+          Map("numMatchedRows" -> rows, "numAddedFiles" -> added))
+      finally { matched.unpersist(); () }
     }
     // file-granular match probe: which live files hold a matched key?
-    val liveSet = current.live.toSet
-    val matchedFiles = snap
-      .join(keys, keyCols, "left_semi")
-      .select("__dv_file").distinct().collect()
-      .map(r => decodeRel(r.getString(0)))
-      .filter(liveSet.contains)
-      .toSeq
+    val matchedFiles = liveMatchCounts(current, operation,
+      snap.join(keys, keyCols, "left_semi")
+        .select(col("__dv_file").as("file"))).map(_._1)
     // a delete-only batch whose keys match nothing: a no-op, not an
     // empty commit
     if (noUpserts && matchedFiles.isEmpty) return current.version
@@ -2817,18 +2790,6 @@ object TxLog {
       colMap = current.colMap)
     enforceConstraints(spark, root, adds, ddl, operation)
     commitLoop(spark, root, operation, partitionCols, { (commits, _) =>
-      // merge is a read-modify-write: its rewrite was computed against
-      // `current`, so ANY commit that landed since is a potential write
-      // skew (e.g. a concurrent append of a row with a matched key that
-      // this rewrite never saw). Detect and fail — the caller re-runs the
-      // merge against the new state; silent last-writer-wins would lose
-      // the concurrent writer's rows. (append/overwrite/upsert recompute
-      // their delta per attempt and need no such check.)
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"$operation based on version ${current.version} conflicts with " +
-            s"concurrent commit ${commits.lastOption.map(_.version).orNull} " +
-            s"at $root — re-run the $operation")
       // same schema policy as appends: a merge whose updates matched NO
       // live file stages only the update rows, and committing their raw
       // schema would narrow the table (or change a type) silently
@@ -2836,65 +2797,12 @@ object TxLog {
     }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
       metrics = extraMetrics ++
         Map("numMatchedFiles" -> matchedFiles.size.toLong,
-          "numAddedFiles" -> adds.size.toLong))
+          "numAddedFiles" -> adds.size.toLong),
+      // merge is a read-modify-write: its rewrite was computed against
+      // `current` (append/overwrite/upsert recompute their delta per
+      // attempt and need no fence)
+      basedOn = Some(current.version))
     } finally { touchedKeys.unpersist(); () }
-  }
-
-  /** [[mergeImpl]]'s merge-on-read tail: the matched keys' current rows
-    * become deletion-vector positions (old images), the updates append
-    * as new files, ONE commit carries both. `snap` is the already
-    * stats/bloom-pruned probe scan with id columns. Unmatched update
-    * keys simply insert (their vector contribution is empty); a
-    * delete-only batch vectors without staging anything.
-    */
-  private def mergeVectoredTail(spark: SparkSession, root: String,
-                                current: Snapshot, snap: DataFrame,
-                                keys: DataFrame, keyCols: Seq[String],
-                                updates: DataFrame,
-                                partitionCols: Seq[String],
-                                statsCols: Seq[String], operation: String,
-                                noUpserts: Boolean,
-                                extraMetrics: Map[String, Long]): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val matched = snap.join(keys, keyCols, "left_semi")
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .cache()
-    try {
-      val newCounts = matched.groupBy("file").agg(count(lit(1)).as("n"))
-        .collect().map(r => decodeRel(r.getString(0)) -> r.getLong(1)).toMap
-      if (noUpserts && newCounts.isEmpty) return current.version
-      val liveSet = current.live.toSet
-      val unknown = newCounts.keysIterator.filterNot(liveSet.contains).toSeq
-      require(unknown.isEmpty,
-        s"deletion-vector file id not in the live set: ${unknown.head}")
-      val (adds, ddl, sizes) =
-        if (noUpserts) (Seq.empty[String], current.schemaDdl,
-          Map.empty[String, Long])
-        else stage(updates, root, partitionCols,
-          colMap = current.colMap)
-      enforceConstraints(spark, root, adds, ddl, operation)
-      val (sidecarRel, dvMap) =
-        if (newCounts.isEmpty) (None, Map.empty[String, DvRef])
-        else {
-          val (sc, m) = writeDvSidecar(spark, root, matched, newCounts, current)
-          (Some(sc), m)
-        }
-      try commitLoop(spark, root, operation, partitionCols, { (commits, _) =>
-          if (tailVersion(spark, root, commits) != Some(current.version))
-            throw new java.util.ConcurrentModificationException(
-              s"$operation based on version ${current.version} conflicts " +
-                s"with a concurrent commit at $root — re-run the $operation")
-          // same schema policy as the rewrite path: an unmatched merge's
-          // raw update schema must not narrow the committed table
-          (adds, Seq.empty, committedDdl(spark, commits, ddl, operation, root))
-        }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes), dv = dvMap,
-        metrics = extraMetrics ++
-          Map("numMatchedRows" -> newCounts.values.sum,
-            "numAddedFiles" -> adds.size.toLong))
-      catch { case t: Throwable =>
-        sidecarRel.foreach(reapSidecar(spark, root, _)); throw t
-      }
-    } finally { matched.unpersist(); () }
   }
 
   /** Apply a CHANGE-FEED batch (rows tagged `_change_type`
@@ -3059,7 +2967,7 @@ object TxLog {
 
   private def deleteVectoredBy(spark: SparkSession, root: String,
                                matcher: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.col
     val current = resolve(spark, root, None)
     if (current.live.isEmpty) return current.version
     // visible rows WITH their (file, pos) identity: the DV-filtered scan,
@@ -3068,38 +2976,12 @@ object TxLog {
     val matched = matcher(taggedVisible(spark, root, current))
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
       .cache()
-    try {
-      val newCounts = matched.groupBy("file").agg(count(lit(1)).as("n"))
-        .collect().map(r => decodeRel(r.getString(0)) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) return current.version // no match: no-op
-      val liveSet = current.live.toSet
-      // fail loudly if the executor-side path extraction ever disagrees
-      // with the log's canonical rel form — committing a vector that no
-      // read would match silently un-deletes the rows
-      val unknown = newCounts.keysIterator.filterNot(liveSet.contains).toSeq
-      require(unknown.isEmpty,
-        s"deletion-vector file id not in the live set: ${unknown.head}")
-      val (sidecarRel, dvMap) =
-        writeDvSidecar(spark, root, matched, newCounts, current)
-      try commitLoop(spark, root, "delete_dv",
-        partitionColsOf(spark, root, current), { (commits, _) =>
-          // read-modify-write: the union sidecar was computed against
-          // `current`, so any interleaved commit invalidates it
-          if (tailVersion(spark, root, commits) != Some(current.version))
-            throw new java.util.ConcurrentModificationException(
-              s"delete_dv based on version ${current.version} conflicts " +
-                s"with a concurrent commit at $root — re-run the delete")
-          (Seq.empty, Seq.empty,
-            commits.lastOption.map(_.schemaDdl).getOrElse(current.schemaDdl))
-        }, dv = dvMap,
-        metrics = Map("numDeletedRows" -> newCounts.values.sum,
-          "numVectoredFiles" -> newCounts.size.toLong))
-      catch { case t: Throwable =>
-        // the sidecar is referenced by no commit — reap it now rather
-        // than leaking an orphan no maintenance pass would reclaim
-        reapSidecar(spark, root, sidecarRel); throw t
-      }
-    } finally { matched.unpersist(); () }
+    try commitVectored(spark, root, current, "delete_dv",
+      partitionColsOf(spark, root, current), matched, None, Seq.empty,
+      skipIfUnmatched = true,
+      (rows, files, _) =>
+        Map("numDeletedRows" -> rows, "numVectoredFiles" -> files))
+    finally { matched.unpersist(); () }
   }
 
   /** Row-level UPDATE as merge-on-read: vector-delete the matched rows'
@@ -3119,7 +3001,7 @@ object TxLog {
                      set: Map[String, org.apache.spark.sql.Column],
                      statsCols: Seq[String] = Seq.empty): Long = {
     require(set.nonEmpty, "update needs at least one set column")
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     val current = resolve(spark, root, None)
     if (current.live.isEmpty) return current.version
     val dataCols = StructType.fromDDL(current.schemaDdl).fieldNames.toSeq
@@ -3129,15 +3011,6 @@ object TxLog {
       .filter(coalesce(condition, lit(false)))
       .cache()
     try {
-      val positions = matched
-        .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      val newCounts = positions.groupBy("file").agg(count(lit(1)).as("n"))
-        .collect().map(r => decodeRel(r.getString(0)) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) return current.version // no match: no-op
-      val liveSet = current.live.toSet
-      val unknown = newCounts.keysIterator.filterNot(liveSet.contains).toSeq
-      require(unknown.isEmpty,
-        s"deletion-vector file id not in the live set: ${unknown.head}")
       // the matched rows' updated images — set expressions see the OLD
       // row (one projection, so swap-style sets like a->b, b->a work)
       val updated = matched.select(dataCols.map { c =>
@@ -3146,32 +3019,12 @@ object TxLog {
           case None    => col(c)
         }
       }: _*)
-      val parts = partitionColsOf(spark, root, current)
-      val (adds, ddl, sizes) = stage(updated, root, parts,
-        colMap = current.colMap)
-      enforceConstraints(spark, root, adds, ddl, "update_dv")
-      val (sidecarRel, dvMap) =
-        writeDvSidecar(spark, root, positions, newCounts, current)
-      try commitLoop(spark, root, "update_dv", parts, { (commits, _) =>
-          if (tailVersion(spark, root, commits) != Some(current.version))
-            throw new java.util.ConcurrentModificationException(
-              s"update_dv based on version ${current.version} conflicts " +
-                s"with a concurrent commit at $root — re-run the update")
-          // committedDdl, not the old schema verbatim: a SET whose
-          // expression widens a column's type staged files the old
-          // schema cannot read — the type-conflict check must reject
-          // that BEFORE the commit, exactly like the rewrite path
-          (adds, Seq.empty,
-            committedDdl(spark, commits, ddl, "update_dv", root))
-        }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes), dv = dvMap,
-        metrics = Map("numUpdatedRows" -> newCounts.values.sum,
-          "numAddedFiles" -> adds.size.toLong,
-          "numVectoredFiles" -> newCounts.size.toLong))
-      catch { case t: Throwable =>
-        // the sidecar is referenced by no commit; the staged adds become
-        // ordinary orphans for cleanOrphans, but the sidecar would leak
-        reapSidecar(spark, root, sidecarRel); throw t
-      }
+      commitVectored(spark, root, current, "update_dv",
+        partitionColsOf(spark, root, current),
+        matched.select(col("__dv_file").as("file"), col("__dv_pos").as("pos")),
+        Some(updated), statsCols, skipIfUnmatched = true,
+        (rows, files, added) => Map("numUpdatedRows" -> rows,
+          "numAddedFiles" -> added, "numVectoredFiles" -> files))
     } finally { matched.unpersist(); () }
   }
 
@@ -3201,6 +3054,43 @@ object TxLog {
           }
         }: _*))
   }
+
+  /** True when the DML mode conf `key` (`spark.graft.delete.mode`,
+    * `update.mode` or `merge.mode`) selects merge-on-read deletion
+    * vectors, false for the default file rewrite. A typo'd value fails
+    * loudly: it must not silently buy the full-rewrite cost the vector
+    * mode exists to avoid.
+    */
+  private def vectorMode(spark: SparkSession, key: String): Boolean =
+    spark.conf.getOption(key).getOrElse("rewrite") match {
+      case "vector"  => true
+      case "rewrite" => false
+      case other => throw new IllegalArgumentException(
+        s"unknown $key '$other' (rewrite|vector)")
+    }
+
+  /** SQL `DELETE FROM` on a commit-log table, for both SQL surfaces
+    * ([[TxLogSql]], [[GraftDmlStrategy]]): [[deleteVectored]] under
+    * `spark.graft.delete.mode=vector`, else the rewriting [[delete]].
+    */
+  private[graft] def sqlDelete(spark: SparkSession, root: String,
+                               condition: org.apache.spark.sql.Column,
+                               statsCols: Seq[String]): Long =
+    if (vectorMode(spark, "spark.graft.delete.mode"))
+      deleteVectored(spark, root, condition)
+    else delete(spark, root, condition, statsCols)
+
+  /** SQL `UPDATE` on a commit-log table, for both SQL surfaces:
+    * [[updateVectored]] under `spark.graft.update.mode=vector`, else the
+    * rewriting [[update]].
+    */
+  private[graft] def sqlUpdate(spark: SparkSession, root: String,
+                               condition: org.apache.spark.sql.Column,
+                               set: Map[String, org.apache.spark.sql.Column],
+                               statsCols: Seq[String]): Long =
+    if (vectorMode(spark, "spark.graft.update.mode"))
+      updateVectored(spark, root, condition, set, statsCols)
+    else update(spark, root, condition, set, statsCols)
 
   /** The table's partition columns as of `current`, robust to log states
     * a raw `history(...).last` is not: derived from the live files' own
@@ -3233,7 +3123,6 @@ object TxLog {
                               operation: String, statsCols: Seq[String],
                               rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Long = {
     val current = resolve(spark, root, None)
-    val liveSet = current.live.toSet
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     // PHASE 1 — find the matched files AND their per-file matched-row
     // counts in ONE FILTERED scan: the predicate reaches the source as a
@@ -3241,20 +3130,10 @@ object TxLog {
     // directories and the rest pushes into parquet row-group skipping.
     // Untouched files cost their metadata; the counts ride the same
     // aggregation, so the predicate columns are decoded exactly once.
-    val matchedCounts = taggedVisible(spark, root, current)
-      .filter(condition)
-      .groupBy("__dv_file").agg(count(lit(1)).as("n_match"))
-      .collect()
-      .map(r => decodeRel(r.getString(0)) -> r.getLong(1))
-    // a matched file outside the live set means the executor-side path
-    // extraction disagrees with the log's canonical rel form — dropping
-    // it would commit a "successful" DML that silently skipped its rows
-    // (same loud-failure rule as deleteVectored's sidecar check)
-    val unknownM = matchedCounts.iterator.map(_._1)
-      .filterNot(liveSet.contains).toSeq
-    require(unknownM.isEmpty,
-      s"$operation matched-file id not in the live set: ${unknownM.head}")
-    val matchedFiles = matchedCounts.map(_._1).toSeq
+    val matchedCounts = liveMatchCounts(current, operation,
+      taggedVisible(spark, root, current).filter(condition)
+        .select(col("__dv_file").as("file")))
+    val matchedFiles = matchedCounts.map(_._1)
     if (matchedFiles.isEmpty) return current.version // no row matches: no-op
 
     val parts = partitionColsOf(spark, root, current)
@@ -3314,11 +3193,6 @@ object TxLog {
     // never changes, so its survivors stay valid by construction
     if (operation != "delete") enforceConstraints(spark, root, adds, ddl, operation)
     commitLoop(spark, root, operation, parts, { (commits, _) =>
-      if (tailVersion(spark, root, commits) != Some(current.version))
-        throw new java.util.ConcurrentModificationException(
-          s"$operation based on version ${current.version} conflicts with " +
-            s"concurrent commit ${commits.lastOption.map(_.version).orNull} " +
-            s"at $root — re-run the $operation")
       // rewrites read the full current schema, so the merge is a no-op
       // here — kept for uniformity with the other non-replacing commits
       (adds, matchedFiles,
@@ -3327,7 +3201,8 @@ object TxLog {
       metrics = Map(rowKey -> matchedRows,
         "numRewrittenFiles" -> rewriteFiles.size.toLong,
         "numRemovedFiles" -> fullFiles.size.toLong,
-        "numAddedFiles" -> adds.size.toLong))
+        "numAddedFiles" -> adds.size.toLong),
+      basedOn = Some(current.version))
   }
 
   /** New commit restoring the live set (and schema) of `toVersion` —
@@ -5755,6 +5630,84 @@ object TxLog {
     try { fileSystem(spark, root).delete(new Path(s"$root/$sidecarRel"), true); () }
     catch { case _: IOException => () }
 
+  /** Per-file match counts of a probe — `files` carries one `file`
+    * column of [[taggedVisible]]'s encoded ids, one row per matched
+    * row — in ONE aggregation job, keyed by the log's root-relative
+    * file id. Every id must be live in `current`: one outside it means
+    * the executor-side path extraction disagrees with the log's
+    * canonical rel form, and dropping it would commit a "successful"
+    * DML that silently skipped its rows (or a vector no read matches,
+    * un-deleting them) — fail loudly instead.
+    */
+  private def liveMatchCounts(current: Snapshot, operation: String,
+                              files: DataFrame): Seq[(String, Long)] = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val counts = files.groupBy("file").agg(count(lit(1))).collect()
+      .map(r => decodeRel(r.getString(0)) -> r.getLong(1)).toSeq
+    val liveSet = current.live.toSet
+    val unknown = counts.iterator.map(_._1).filterNot(liveSet.contains).toSeq
+    require(unknown.isEmpty,
+      s"$operation matched-file id not in the live set: ${unknown.head}")
+    counts
+  }
+
+  /** The one commit tail of the merge-on-read paths ([[deleteVectored]],
+    * [[updateVectored]], merge under `spark.graft.merge.mode=vector`).
+    * `positions` holds the matched rows' `(file, pos)` identities off
+    * the DV-tagged probe scan; `rows` the batch appended in the same
+    * commit (None for a pure delete). In order: per-file match counts
+    * ([[liveMatchCounts]]); the no-op return when nothing matched and
+    * `skipIfUnmatched`; staging and constraint check of `rows`; the
+    * cumulative sidecar; the stale-base-fenced commit — and the
+    * sidecar's reap when that commit never lands (nothing else ever
+    * reclaims an unreferenced sidecar; staged adds become ordinary
+    * orphans for cleanOrphans). `metrics` maps (matched rows, vectored
+    * files, added files) to the operation's commit metric keys.
+    */
+  private def commitVectored(spark: SparkSession, root: String,
+                             current: Snapshot, operation: String,
+                             parts: Seq[String], positions: DataFrame,
+                             rows: Option[DataFrame], statsCols: Seq[String],
+                             skipIfUnmatched: Boolean,
+                             metrics: (Long, Long, Long) => Map[String, Long]): Long = {
+    val newCounts = liveMatchCounts(current, operation, positions).toMap
+    if (skipIfUnmatched && newCounts.isEmpty) return current.version
+    val (adds, ddl, sizes) = rows match {
+      case Some(df) =>
+        val staged = stage(df, root, parts, colMap = current.colMap)
+        enforceConstraints(spark, root, staged._1, staged._2, operation)
+        staged
+      case None =>
+        (Seq.empty[String], current.schemaDdl, Map.empty[String, Long])
+    }
+    val (sidecarRel, dvMap) =
+      if (newCounts.isEmpty) (None, Map.empty[String, DvRef])
+      else {
+        val (sc, m) = writeDvSidecar(spark, root, positions, newCounts, current)
+        (Some(sc), m)
+      }
+    try commitLoop(spark, root, operation, parts, { (commits, _) =>
+        val schemaDdl = rows match {
+          // a data-less commit echoes the schema it is based on
+          case None => commits.lastOption.map(_.schemaDdl)
+            .getOrElse(current.schemaDdl)
+          // committedDdl, not the old schema verbatim: an unmatched
+          // merge's raw update schema must not narrow the table, and a
+          // SET widening a column's type staged files the old schema
+          // cannot read — rejected BEFORE the commit, like the rewrites
+          case Some(_) => committedDdl(spark, commits, ddl, operation, root)
+        }
+        (adds, Seq.empty, schemaDdl)
+      }, withSizes(computeStats(spark, root, adds, statsCols,
+        colMap = current.colMap), sizes), dv = dvMap,
+      metrics = metrics(newCounts.values.sum, newCounts.size.toLong,
+        adds.size.toLong),
+      basedOn = Some(current.version))
+    catch { case t: Throwable =>
+      sidecarRel.foreach(reapSidecar(spark, root, _)); throw t
+    }
+  }
+
   /** The data rows of `files` at the `(file, pos)` positions listed in
     * `positions` — the semi-join shared by the change feed's vector
     * delta paths (rows a commit's vector newly deleted, rows a rollback
@@ -5837,18 +5790,11 @@ object TxLog {
       // and (for partitioned layouts) partition values parseable from
       // every live path. Falls back to the generic listed scan
       // otherwise — correct, just O(files) filesystem calls slower.
-      val planningOn = spark.conf
-        .get("spark.graft.scan.metadataPlanning", "true").trim
-        .equalsIgnoreCase("true")
-      // conf gate FIRST: with planning off, the pruned __bytes read
-      // would be paid only to be discarded
-      val metaScan =
-        if (!planningOn) None
-        else {
-          val sizes = snap.stats.col(FileSizeKey) // pruned: one column
-          if (!snap.live.forall(sizes.contains)) None
-          else metadataScan(spark, root, snap, schema, sizes)
-        }
+      val metaScan = {
+        val sizes = snap.stats.col(FileSizeKey) // pruned: one column
+        if (!snap.live.forall(sizes.contains)) None
+        else metadataScan(spark, root, snap, schema, sizes)
+      }
       val scan = metaScan.getOrElse(
         spark.read
           .option("basePath", root)

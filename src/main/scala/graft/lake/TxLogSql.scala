@@ -116,18 +116,8 @@ object TxLogSql {
     plan match {
 
       case d: DeleteFromTable => resolve(d.table).map { case (name, reg) =>
-        // spark.graft.delete.mode=vector writes a positional deletion
-        // vector instead of rewriting matched files (TxLog.deleteVectored
-        // — the sparse-delete path); default stays the rewrite
-        val mode = spark.conf
-          .getOption("spark.graft.delete.mode").getOrElse("rewrite")
-        val cond = toColumn(unqualify(d.condition))
-        val v = mode match {
-          case "vector"  => TxLog.deleteVectored(spark, reg.root, cond)
-          case "rewrite" => TxLog.delete(spark, reg.root, cond, reg.statsCols)
-          case other => fail(sqlText,
-            s"unknown spark.graft.delete.mode '$other' (rewrite|vector)")
-        }
+        val v = TxLog.sqlDelete(spark, reg.root,
+          toColumn(unqualify(d.condition)), reg.statsCols)
         refresh(spark, name, reg); v
       }
 
@@ -139,18 +129,7 @@ object TxLogSql {
         }.toMap
         require(set.size == u.assignments.size,
           s"duplicate SET column in: $sqlText")
-        // spark.graft.update.mode=vector: merge-on-read UPDATE (vector
-        // old positions + append updated rows — TxLog.updateVectored)
-        val mode = spark.conf
-          .getOption("spark.graft.update.mode").getOrElse("rewrite")
-        val v = mode match {
-          case "vector" =>
-            TxLog.updateVectored(spark, reg.root, cond, set, reg.statsCols)
-          case "rewrite" =>
-            TxLog.update(spark, reg.root, cond, set, reg.statsCols)
-          case other => fail(sqlText,
-            s"unknown spark.graft.update.mode '$other' (rewrite|vector)")
-        }
+        val v = TxLog.sqlUpdate(spark, reg.root, cond, set, reg.statsCols)
         refresh(spark, name, reg); v
       }
 

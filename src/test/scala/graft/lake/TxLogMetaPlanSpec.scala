@@ -11,7 +11,7 @@ import java.nio.file.Files
   * calls at plan time — partitioned layouts included (values parsed
   * from the live paths, static partition filters pruned EXACTLY in the
   * index), while pre-feature logs fall back to the listed scan.
-  * Content must be identical either way.
+  * Content must match a plain parquet read of the live files.
   */
 class TxLogMetaPlanSpec extends SparkSpec {
 
@@ -25,10 +25,13 @@ class TxLogMetaPlanSpec extends SparkSpec {
       case f: FileSourceScanExec => f.relation.location
     }
 
-  private def withListing[A](body: => A): A = {
-    spark.conf.set("spark.graft.scan.metadataPlanning", "false")
-    try body finally spark.conf.unset("spark.graft.scan.metadataPlanning")
-  }
+  /** Reference read: a plain listed parquet scan of the latest live
+    * files, in the table's column order.
+    */
+  private def listed(root: String, cols: Seq[String]) =
+    spark.read.option("basePath", root)
+      .parquet(TxLog.liveSizes(spark, root).map(f => s"$root/${f._1}"): _*)
+      .select(cols.map(col): _*)
 
   test("unpartitioned snapshots plan from the log; content matches the listed scan") {
     val root = tmpRoot()
@@ -39,15 +42,8 @@ class TxLogMetaPlanSpec extends SparkSpec {
     } // note: NO statsCols — sizes ride every commit regardless
     val df = TxLog.readLatest(spark, root)
     indexOf(df).get shouldBe a[GraftFileIndex]
-    val listed = withListing(TxLog.readLatest(spark, root))
-    indexOf(listed).get should not be a[GraftFileIndex]
-    df.orderBy("id").collect() shouldBe listed.orderBy("id").collect()
-    // boolean parsing is case-insensitive, and anything not literally
-    // true lands on the always-correct listed fallback
-    spark.conf.set("spark.graft.scan.metadataPlanning", "FALSE")
-    try indexOf(TxLog.readLatest(spark, root)).get should
-      not be a[GraftFileIndex]
-    finally spark.conf.unset("spark.graft.scan.metadataPlanning")
+    df.orderBy("id").collect() shouldBe
+      listed(root, df.columns).orderBy("id").collect()
     // parquet pushdown is unchanged: the filter reaches the scan
     val plan = df.filter(col("id") === 7L).queryExecution
       .executedPlan.toString
@@ -62,8 +58,8 @@ class TxLogMetaPlanSpec extends SparkSpec {
     val df = TxLog.readLatest(spark, root)
     indexOf(df).get shouldBe a[GraftFileIndex]
     df.columns.toSeq shouldBe Seq("id", "s", "part") // table order restored
-    val listed = withListing(TxLog.readLatest(spark, root))
-    df.orderBy("id").collect() shouldBe listed.orderBy("id").collect()
+    df.orderBy("id").collect() shouldBe
+      listed(root, df.columns).orderBy("id").collect()
     // partition pruning is enforced BY the index (partition filters are
     // never re-applied above the scan, so pruning must be exact): the
     // filtered scan reads only p1's files, and only p1's rows arrive
@@ -94,7 +90,7 @@ class TxLogMetaPlanSpec extends SparkSpec {
     df.filter(col("region").isNull).select("id")
       .as[Long].collect().toSeq shouldBe Seq(3L)
     df.orderBy("id").collect() shouldBe
-      withListing(TxLog.readLatest(spark, root)).orderBy("id").collect()
+      listed(root, df.columns).orderBy("id").collect()
   }
 
   test("a log without recorded sizes falls back to the listed scan") {
