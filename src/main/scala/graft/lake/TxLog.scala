@@ -342,10 +342,8 @@ object TxLog {
     // bound comes from the SAME listing, zero extra IO.
     val after =
       if (!boundAtCheckpoint) afterVersion
-      else math.max(afterVersion, listed.map(_.getName).collect {
-        case CkptFile(v)  => v.toLong
-        case CkptDirV2(v) => v.toLong
-      }.maxOption.getOrElse(-1L))
+      else math.max(afterVersion,
+        ckptsIn(listed.map(_.getName)).keys.maxOption.getOrElse(-1L))
     listed
       .filter { p =>
         p.getName match {
@@ -3371,10 +3369,7 @@ object TxLog {
       case _          => false
     }
     if (hasOrigin) 0L
-    else names.collect {
-      case CkptFile(v)  => v.toLong
-      case CkptDirV2(v) => v.toLong
-    }.minOption.getOrElse(Long.MaxValue)
+    else ckptsIn(names).keys.minOption.getOrElse(Long.MaxValue)
   }
 
   /** The latest committed snapshot. */
@@ -3871,18 +3866,8 @@ object TxLog {
     val fs = fileSystem(spark, root)
     if (!fs.exists(dir)) return (0L, 0L)
     val names = CommitStore.forPath(dir).list(fs, dir).map(_.getName)
-    (names.count(LogFile.matches).toLong,
-      ckptVersionsOf(names).size.toLong)
+    (names.count(LogFile.matches).toLong, ckptsIn(names).size.toLong)
   }
-
-  /** Checkpoint versions in a log-directory name listing, ascending — a
-    * version carrying both checkpoint formats counts ONCE. The single
-    * parse [[logCounts]], [[checkpointVersions]], and any future format
-    * addition share.
-    */
-  private def ckptVersionsOf(names: Seq[String]): Seq[Long] =
-    (names.collect { case CkptFile(v) => v.toLong } ++
-      names.collect { case CkptDirV2(v) => v.toLong }).distinct.sorted
 
   /** Columns with a live bloom index at `root` (sidecar directories
     * under `_txlog/bloom_<column>/`) — DESCRIBE DETAIL's index listing.
@@ -4471,34 +4456,17 @@ object TxLog {
     */
   private def readCkptV1(spark: SparkSession, root: String,
                          v: Long): Snapshot = {
-    val fs = fileSystem(spark, root)
-    val in = fs.open(ckptPath(root, v))
-    val n = try mapper.readTree(new String(in.readAllBytes(), UTF_8))
-            finally in.close()
+    val n = readNode(fileSystem(spark, root), ckptPath(root, v))
     checkReaderVersion(n, s"checkpoint v$v")
     val it = n.get("live").elements()
     val b = Seq.newBuilder[String]
     while (it.hasNext) b += it.next().asText()
-    val txnsB = Map.newBuilder[String, Long]
-    Option(n.get("txns")).foreach(_.properties().forEach(e =>
-      txnsB += e.getKey -> e.getValue.asLong))
-    val consB = Map.newBuilder[String, String]
-    Option(n.get("constraints")).foreach(_.properties().forEach(e =>
-      consB += e.getKey -> e.getValue.asText()))
     val dvB = Map.newBuilder[String, DvRef]
     Option(n.get("dv")).foreach(_.properties().forEach(e =>
       dvB += e.getKey -> (e.getValue.get("path").asText,
         e.getValue.get("rows").asLong)))
-    val droppedB = Set.newBuilder[String]
-    Option(n.get("droppedCols")).foreach(_.elements()
-      .forEachRemaining(e => droppedB += e.asText))
-    val cmB = Map.newBuilder[String, String]
-    Option(n.get("colMap")).foreach(_.properties().forEach(e =>
-      cmB += e.getKey -> e.getValue.asText()))
-    Snapshot(b.result(), n.get("schemaDdl").asText, v,
-      StatsView.eager(statsFromNode(n)),
-      txnsB.result(), consB.result(), dvB.result(), droppedB.result(),
-      cmB.result())
+    snapshotOf(ckptScalars(n, v), b.result(),
+      StatsView.eager(statsFromNode(n)), dvB.result())
   }
 
   /** Fold [[Commit.schemaDrop]] tombstones (lower-cased names) across
@@ -4587,18 +4555,15 @@ object TxLog {
     }
     // both checkpoint formats are candidates; when one version carries
     // both forms they summarize identical state and v2 (parquet) wins
-    val ckptForms: Map[Long, Boolean] = // version -> has a v2 form
-      (names.collect { case CkptFile(v) => v.toLong -> false } ++
-        names.collect { case CkptDirV2(v) => v.toLong -> true })
-        .groupBy(_._1).view.mapValues(_.exists(_._2)).toMap
+    val ckpts = ckptsIn(names)
     // Newest-first checkpoint candidates. A candidate whose files are
     // GONE by read time — listed a moment ago, then hit by a concurrent
     // torn-checkpoint repair or left headerless by a crashed delete —
     // is SKIPPED in favor of the next-older one: checkpoints are
     // derived state, so an older base plus a longer tail resolves
     // identical content, and the origin guard below still refuses when
-    // no complete chain remains. Only FileNotFoundException qualifies;
-    // any other read failure (real corruption) stays loud.
+    // no complete chain remains. Only a vanished path ([[isPathGone]])
+    // qualifies; any other read failure (real corruption) stays loud.
     //
     // Checkpoint BASE snapshots are cached per (root, version, header
     // stat): content is immutable for a (root, version) — and the stat
@@ -4608,12 +4573,12 @@ object TxLog {
     // whole live-file row set — several times per commit on the write
     // paths (v1 paid a driver JSON re-parse for the same reason).
     var base: Option[Snapshot] = None
-    val candIt = ckptForms.keysIterator
-      .filter(v => upTo.forall(v <= _)).toSeq.sortBy(-_).iterator
+    val candIt = ckpts.keys.toSeq.filter(v => upTo.forall(v <= _))
+      .reverseIterator
     while (base.isEmpty && candIt.hasNext) {
       val v = candIt.next()
       try {
-        base = Some(if (ckptForms(v)) {
+        base = Some(if (ckpts(v).v2.isDefined) {
           // v2 identity = the checkpoint dir's FILE NAMES (one listing):
           // parquet part names carry the write's job UUID, so a table
           // deleted and recreated at the same path can never collide —
@@ -4630,16 +4595,7 @@ object TxLog {
           cachedCkpt((s"$root#v1", v, st.getModificationTime, st.getLen),
             readCkptV1(spark, root, v))
         })
-      } catch {
-        case _: java.io.FileNotFoundException => ()
-        // Spark's parquet path resolution reports a dir deleted between
-        // our listing and its read as AnalysisException, not FNF
-        case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage != null &&
-            (e.getMessage.contains("PATH_NOT_FOUND") ||
-              e.getMessage.toLowerCase(java.util.Locale.ROOT)
-                .contains("does not exist")) => ()
-      }
+      } catch { case e if isPathGone(e) => () }
     }
     val ckptVersion = base.map(_.version)
     val tail = history(spark, root, afterVersion = ckptVersion.getOrElse(-1L))
@@ -4673,40 +4629,48 @@ object TxLog {
     // checkpoint's stay behind the view's pruned readers
     val stats = base.map(_.stats).getOrElse(StatsView.empty).withOverlay(
       tail.foldLeft(Map.empty: FileStats)((acc, c) => acc ++ c.stats))
-    // txn watermarks only ever move forward (max), so replay order is safe
-    val txns = tail.foldLeft(base.map(_.txns).getOrElse(Map.empty[String, Long])) {
-      case (acc, c) => c.txn match {
-        case Some((app, v)) => acc.updated(app, math.max(v, acc.getOrElse(app, Long.MinValue)))
-        case None           => acc
-      }
-    }
-    // constraints fold as deltas (add/drop commits), like the live set —
-    // commits that don't touch constraints carry nothing
-    val constraints = tail.foldLeft(
-      base.map(_.constraints).getOrElse(Map.empty[String, String]))(
-      (acc, c) => acc -- c.consDrop ++ c.consAdd)
     // deletion vectors fold per FILE: a commit's dv map REPLACES the
     // file's vector (each sidecar is cumulative), removing or explicitly
     // dv-dropping a file clears it; freshly added files never carry one
     val dvs = tail.foldLeft(base.map(_.dvs).getOrElse(Map.empty[String, DvRef]))(
       (acc, c) => acc -- c.remove -- c.dvDrop ++ c.dv)
-    // drop-column tombstones survive log truncation like constraints:
-    // losing one would let a later evolution resurrect stale values
-    val dropped = foldDropped(
-      base.map(_.droppedCols).getOrElse(Set.empty), tail)
-    // column mapping folds as declare-or-inherit: a commit that carries
-    // `renames` (rename/drop/rollback/clone) restates the FULL mapping,
-    // an overwrite clears it (all files rewritten under logical names),
-    // everything else inherits
-    val colMap = tail.foldLeft(
-      base.map(_.colMap).getOrElse(Map.empty[String, String])) { (acc, c) =>
-      c.renames.getOrElse(if (isFullRewrite(c.operation)) Map.empty else acc)
-    }
-    Snapshot(live.toSeq,
-      tail.lastOption.map(_.schemaDdl).getOrElse(base.get.schemaDdl),
-      tail.lastOption.map(_.version).getOrElse(base.get.version),
-      stats, txns, constraints, dvs, dropped, colMap)
+    snapshotOf(
+      foldScalars(base.fold(NoScalars)(b => scalarsOf(Left(b))), tail),
+      live.toSeq, stats, dvs)
   }
+
+  /** Fold a commit tail's table-scoped state onto a base's — the ONE
+    * replay of the scalars, shared by the materialized ([[resolveOnce]])
+    * and distributed ([[resolveMeta]]) resolves. An empty tail returns
+    * `base` unchanged.
+    */
+  private def foldScalars(base: ScalarState, tail: Seq[Commit]): ScalarState =
+    ScalarState(
+      tail.lastOption.map(_.version).getOrElse(base.version),
+      tail.lastOption.map(_.schemaDdl).getOrElse(base.schemaDdl),
+      // txn watermarks only ever move forward (max), so replay order is
+      // safe
+      tail.foldLeft(base.txns) { (acc, c) =>
+        c.txn match {
+          case Some((app, v)) =>
+            acc.updated(app, math.max(v, acc.getOrElse(app, Long.MinValue)))
+          case None => acc
+        }
+      },
+      // constraints fold as deltas (add/drop commits), like the live set
+      // — commits that don't touch constraints carry nothing
+      tail.foldLeft(base.constraints)(
+        (acc, c) => acc -- c.consDrop ++ c.consAdd),
+      // drop-column tombstones survive log truncation like constraints:
+      // losing one would let a later evolution resurrect stale values
+      foldDropped(base.droppedCols, tail),
+      // column mapping folds as declare-or-inherit: a commit that carries
+      // `renames` (rename/drop/rollback/clone) restates the FULL mapping,
+      // an overwrite clears it (all files rewritten under logical
+      // names), everything else inherits
+      tail.foldLeft(base.colMap) { (acc, c) =>
+        c.renames.getOrElse(if (isFullRewrite(c.operation)) Map.empty else acc)
+      })
 
   // -------------------------------------------------------------------
   // Distributed metadata tier — bounded-driver resolve for big tables
@@ -4809,13 +4773,11 @@ object TxLog {
     // the fallback reuses THIS listing — a sub-threshold table must not
     // pay an extra log-dir LIST for having been asked through the tier
     def full = Left(resolve(spark, root, upTo, preListed = Some(names)))
-    val v2s = names.collect { case CkptDirV2(v) => v.toLong }
-      .filter(v => upTo.forall(v <= _))
-    val v1s = names.collect { case CkptFile(v) => v.toLong }
-      .filter(v => upTo.forall(v <= _))
     // the tier applies only when the NEWEST eligible checkpoint has a
     // v2 form — an older v2 beneath a newer v1 must not shadow its state
-    val candidate = v2s.maxOption.filter(v => v1s.forall(_ <= v))
+    val ckpts = ckptsIn(names)
+    val candidate = ckpts.keys.filter(v => upTo.forall(v <= _)).maxOption
+      .filter(ckpts(_).v2.isDefined)
     val out = candidate.flatMap { v =>
       try {
         // header parse cached per (path, dir listing): resolveMeta
@@ -4837,37 +4799,15 @@ object TxLog {
           val hit = ckptHeaderCache.get(hKey)
           if (hit != null) hit
           else {
-            val in = fs.open(hp)
-            val parsed =
-              try mapper.readTree(new String(in.readAllBytes(), UTF_8))
-              finally in.close()
+            val parsed = readNode(fs, hp)
             ckptHeaderCache.put(hKey, parsed)
             parsed
           }
         }
-        checkReaderVersion(n, s"checkpoint v$v")
-        val fmt = Option(n.get("format")).map(_.asInt).getOrElse(2)
+        val fmt = ckptFormat(n, root, v)
         val liveCount = Option(n.get("liveCount")).map(_.asLong)
         if (fmt != 3 || !liveCount.exists(_ >= metaThreshold(spark))) None
         else {
-          val legend: IndexedSeq[String] =
-            Option(n.get("statCols")).map { a =>
-              val b = IndexedSeq.newBuilder[String]
-              a.elements().forEachRemaining(e => b += e.asText)
-              b.result()
-            }.getOrElse(IndexedSeq.empty)
-          val txnsB = Map.newBuilder[String, Long]
-          Option(n.get("txns")).foreach(_.properties().forEach(e =>
-            txnsB += e.getKey -> e.getValue.asLong))
-          val consB = Map.newBuilder[String, String]
-          Option(n.get("constraints")).foreach(_.properties().forEach(e =>
-            consB += e.getKey -> e.getValue.asText()))
-          val droppedB = Set.newBuilder[String]
-          Option(n.get("droppedCols")).foreach(_.elements()
-            .forEachRemaining(e => droppedB += e.asText))
-          val cmB = Map.newBuilder[String, String]
-          Option(n.get("colMap")).foreach(_.properties().forEach(e =>
-            cmB += e.getKey -> e.getValue.asText()))
           val tail = history(spark, root, afterVersion = v)
             .filter(c => upTo.forall(c.version <= _))
           // the per-file tail folds, each the exact semantics of
@@ -4886,25 +4826,10 @@ object TxLog {
             c.dv.foreach { case (f, r) =>
               tailDvs = tailDvs.updated(f, Some(r)) }
           }
-          val txns = tail.foldLeft(txnsB.result()) { case (acc, c) =>
-            c.txn match {
-              case Some((app, tv)) => acc.updated(app,
-                math.max(tv, acc.getOrElse(app, Long.MinValue)))
-              case None => acc
-            }
-          }
-          val constraints = tail.foldLeft(consB.result())(
-            (acc, c) => acc -- c.consDrop ++ c.consAdd)
-          val dropped = foldDropped(droppedB.result(), tail)
-          val colMap = tail.foldLeft(cmB.result()) { (acc, c) =>
-            c.renames.getOrElse(
-              if (isFullRewrite(c.operation)) Map.empty else acc)
-          }
-          Some(MetaSnapshot(ckptPathV2(root, v).toString, legend, v,
-            liveCount.get,
-            tail.lastOption.map(_.schemaDdl).getOrElse(n.get("schemaDdl").asText),
-            tail.lastOption.map(_.version).getOrElse(v),
-            txns, constraints, dropped, colMap,
+          val s = foldScalars(ckptScalars(n, v), tail)
+          Some(MetaSnapshot(ckptPathV2(root, v).toString, ckptLegend(n), v,
+            liveCount.get, s.schemaDdl, s.version,
+            s.txns, s.constraints, s.droppedCols, s.colMap,
             touched, tailStats, tailDvs,
             tail.map(c => (c.remove, c.add))))
         }
@@ -4929,6 +4854,17 @@ object TxLog {
   private final case class ScalarState(version: Long, schemaDdl: String,
       txns: Map[String, Long], constraints: Map[String, String],
       droppedCols: Set[String], colMap: Map[String, String])
+
+  /** The state before the log's origin: what a checkpoint-less replay
+    * folds its tail onto.
+    */
+  private val NoScalars =
+    ScalarState(-1L, "", Map.empty, Map.empty, Set.empty, Map.empty)
+
+  private def snapshotOf(s: ScalarState, live: Seq[String], stats: StatsView,
+                         dvs: Map[String, DvRef]): Snapshot =
+    Snapshot(live, s.schemaDdl, s.version, stats, s.txns, s.constraints,
+      dvs, s.droppedCols, s.colMap)
 
   private def scalarsOf(
       meta: Either[Snapshot, MetaSnapshot]): ScalarState =
@@ -5240,14 +5176,6 @@ object TxLog {
     val legend: IndexedSeq[String] =
       (carried ++ touchedLive.flatMap(_.stats.keys)).toSeq
         .distinct.sorted.toIndexedSeq
-    val rowSchema = StructType(
-      Seq(StructField("idx", LongType, nullable = false),
-          StructField("file", StringType, nullable = false),
-          StructField("dvPath", StringType, nullable = true),
-          StructField("dvRows", LongType, nullable = true)) ++
-        legend.indices.flatMap(i => Seq(
-          StructField(s"min$i", DoubleType, nullable = true),
-          StructField(s"max$i", DoubleType, nullable = true))))
     val baseCols = Seq(col("idx"), col("file"), col("dvPath"),
       col("dvRows")) ++
       legend.zipWithIndex.flatMap { case (k, j) =>
@@ -5260,57 +5188,22 @@ object TxLog {
       }
     val baseDF = survivorDF.select(baseCols: _*)
     val keyIdx = legend.zipWithIndex.toMap
-    val touchedRows: Seq[Row] = touchedLive.map { t =>
-      val cells = new Array[Any](2 * legend.size)
-      t.stats.foreach { case (k, (mn, mx)) =>
-        val j = keyIdx(k); cells(2 * j) = mn; cells(2 * j + 1) = mx
-      }
-      Row.fromSeq(Seq[Any](pos(t.file), t.file,
-        t.dv.map(_._1).orNull, t.dv.map(_._2).map(Long.box).orNull) ++ cells)
-    }
+    val touchedRows: Seq[Row] = touchedLive.map(t =>
+      ckptRow(pos(t.file), t.file, t.dv, t.stats, keyIdx))
     val touchedDF = spark.createDataFrame(
       spark.sparkContext.parallelize(touchedRows,
         math.max(1, touchedRows.size / 65536)),
-      rowSchema)
-    val liveCount = m.ckptLiveCount - touchedInBase + touchedLive.size
-    val meta = {
-      val n = mapper.createObjectNode()
-      n.put("format", 3)
-      n.put("liveCount", liveCount)
-      if (legend.nonEmpty) {
-        val sc = n.putArray("statCols")
-        legend.foreach(sc.add)
-      }
-      n.put("version", m.version)
-      n.put("schemaDdl", m.schemaDdl)
-      if (m.txns.nonEmpty) {
-        val tn = n.putObject("txns")
-        m.txns.foreach { case (app, v) => tn.put(app, v) }
-      }
-      if (m.constraints.nonEmpty) {
-        val cn = n.putObject("constraints")
-        m.constraints.foreach { case (name, sql) => cn.put(name, sql) }
-      }
-      if (m.droppedCols.nonEmpty) {
-        val dc = n.putArray("droppedCols")
-        m.droppedCols.toSeq.sorted.foreach(dc.add)
-      }
-      if (m.colMap.nonEmpty) {
-        val cm = n.putObject("colMap")
-        m.colMap.foreach { case (l, p) => cm.put(l, p) }
-      }
-      // minReaderOfState keys off set-emptiness only; a sentinel entry
-      // stands in for the distributed dv set
-      val mr = minReaderOfState(m.colMap,
-        if (hasLiveDv) Map("__live" -> (("", 0L): DvRef)) else Map.empty,
-        m.droppedCols)
-      if (mr > 1) n.put("minReader", mr)
-      n.toString
-    }
-    publishCkptDir(spark, fs, root, dst,
+      ckptReadSchema(legend.size))
+    // minReaderOfState keys off set-emptiness only; a sentinel entry
+    // stands in for the distributed dv set
+    val mr = minReaderOfState(m.colMap,
+      if (hasLiveDv) Map("__live" -> (("", 0L): DvRef)) else Map.empty,
+      m.droppedCols)
+    publishCkptDir(spark, fs, root, m.version,
       tmp => baseDF.union(touchedDF)
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString),
-      meta)
+      ckptMetaJson(m.ckptLiveCount - touchedInBase + touchedLive.size,
+        legend, scalarsOf(Right(m)), mr))
   }
 
   /** The v2 checkpoint publication protocol, shared by the classic and
@@ -5321,8 +5214,9 @@ object TxLog {
     * and wins benignly.
     */
   private def publishCkptDir(spark: SparkSession, fs: FileSystem,
-                             root: String, dst: Path,
+                             root: String, version: Long,
                              writeRows: Path => Unit, meta: String): Unit = {
+    val dst = ckptPathV2(root, version)
     val tmp = new Path(s"$root/$LogDirName/.ckpt_tmp_${
       UUID.randomUUID().toString.replace("-", "").take(12)}")
     try {
@@ -5333,12 +5227,7 @@ object TxLog {
       // builder cannot parse (a feature rung this reader lacks,
       // transient in a truncated range) degrades to no sidecar rather
       // than failing the checkpoint; readers then keep the raw path.
-      val histV = dst.getName match {
-        case CkptDirV2(v) => v.toLong
-        case other => throw new IllegalStateException(
-          s"not a v2 checkpoint dir name: $other")
-      }
-      (try Some(renderHistRows(historyForCkpt(spark, root, histV)))
+      (try Some(renderHistRows(historyForCkpt(spark, root, version)))
        catch { case _: UnsupportedLogFeatureException => None }
       ).foreach { hist =>
         val hout = fs.create(new Path(tmp, CkptHistName), true)
@@ -5508,16 +5397,35 @@ object TxLog {
   private val BloomSidecarSchema: StructType = StructType(Seq(
     StructField("file", StringType), StructField("bloom", BinaryType)))
 
-  /** v1/v3 checkpoint per-file row layout for `legendSize` stat pairs —
-    * what [[checkpoint]]/[[checkpointV2]]/[[checkpointV2Incremental]] all
-    * write. Requested columns are a subset-projection: a reader that asks
-    * for fewer stat pairs than the file holds prunes the rest.
+  /** The format-3 checkpoint per-file row layout for `legendSize` stat
+    * pairs — the ONE definition both v2 writers ([[checkpointV2]],
+    * [[checkpointV2Incremental]]) build their rows against and every
+    * reader scans with. `idx`/`file` are written required; file-source
+    * reads relax every field to nullable, so a reader asking for fewer
+    * stat pairs than the file holds is a subset projection that prunes
+    * the rest.
     */
   private def ckptReadSchema(legendSize: Int): StructType = StructType(
-    Seq(StructField("idx", LongType), StructField("file", StringType),
+    Seq(StructField("idx", LongType, nullable = false),
+        StructField("file", StringType, nullable = false),
         StructField("dvPath", StringType), StructField("dvRows", LongType)) ++
       (0 until legendSize).flatMap(i => Seq(
         StructField(s"min$i", DoubleType), StructField(s"max$i", DoubleType))))
+
+  /** One [[ckptReadSchema]] row: a live file's replay position, path and
+    * vector, and its stats placed in the `min<i>`/`max<i>` pair `keyIdx`
+    * assigns each key (the legend's positions).
+    */
+  private def ckptRow(idx: Long, file: String, dv: Option[DvRef],
+                      stats: Map[String, (Double, Double)],
+                      keyIdx: Map[String, Int]): Row = {
+    val cells = new Array[Any](2 * keyIdx.size)
+    stats.foreach { case (k, (mn, mx)) =>
+      val j = keyIdx(k); cells(2 * j) = mn; cells(2 * j + 1) = mx
+    }
+    Row.fromSeq(Seq[Any](idx, file, dv.map(_._1).orNull,
+      dv.map(_._2).map(Long.box).orNull) ++ cells)
+  }
 
   /** Legacy format-2 (map-layout) checkpoint rows — readable forever. */
   private val CkptV2MapSchema: StructType = StructType(Seq(
@@ -5918,9 +5826,9 @@ object TxLog {
     * checkpoint is row-scaled with the table.
     *
     * v1 checkpoints remain readable forever (existing logs resolve
-    * unchanged); `spark.graft.checkpoint.format=json` opts a writer
-    * back into v1. When both formats exist at one version they
-    * summarize identical state and v2 is preferred.
+    * unchanged); [[writeLegacyCheckpointV1]] still writes one as a
+    * fixture. When both formats exist at one version they summarize
+    * identical state and v2 is preferred.
     */
   private val CkptDirV2 = raw"(\d{20})\.checkpoint\.parquet".r
 
@@ -5928,6 +5836,146 @@ object TxLog {
     new Path(f"$root/$LogDirName/$version%020d.checkpoint.parquet")
 
   private val CkptMetaName = "_meta.json"
+
+  // -- Checkpoint codec: the one place the checkpoint format lives --
+  //
+  // Names ([[ckptsIn]]), the header's table-scoped state ([[ckptScalars]]
+  // / [[putCkptScalars]]), the reader gate ([[ckptFormat]]) and the
+  // per-file row layout ([[ckptReadSchema]]). Every checkpoint reader,
+  // writer and log-maintenance op goes through these.
+
+  /** One checkpoint version's names in a `_txlog` listing: the v1 JSON
+    * file and/or the v2 parquet directory.
+    */
+  private final case class CkptNames(v1: Option[String], v2: Option[String]) {
+    def all: Seq[String] = v1.toSeq ++ v2
+  }
+
+  /** Every checkpoint in a `_txlog` name listing, by ascending version —
+    * a version carrying both forms is ONE entry. Parses the listing the
+    * caller already holds; never lists.
+    */
+  private def ckptsIn(names: Iterable[String])
+      : scala.collection.immutable.SortedMap[Long, CkptNames] =
+    names.foldLeft(scala.collection.immutable.SortedMap.empty[Long, CkptNames]) {
+      (acc, n) =>
+        def put(v: String)(f: CkptNames => CkptNames) = {
+          val k = v.toLong
+          acc.updated(k, f(acc.getOrElse(k, CkptNames(None, None))))
+        }
+        n match {
+          case CkptFile(v)  => put(v)(_.copy(v1 = Some(n)))
+          case CkptDirV2(v) => put(v)(_.copy(v2 = Some(n)))
+          case _            => acc
+        }
+    }
+
+  private def readNode(fs: FileSystem,
+                       p: Path): com.fasterxml.jackson.databind.JsonNode = {
+    val in = fs.open(p)
+    try mapper.readTree(new String(in.readAllBytes(), UTF_8))
+    finally in.close()
+  }
+
+  /** The reader gate every v2 header passes before its rows are trusted:
+    * the `minReader` rung and the layout `format` (2 when absent — the
+    * pre-legend writers) must both be ones this build reads. Returns the
+    * format.
+    */
+  private def ckptFormat(n: com.fasterxml.jackson.databind.JsonNode,
+                         root: String, version: Long): Int = {
+    checkReaderVersion(n, s"checkpoint v$version")
+    val fmt = Option(n.get("format")).map(_.asInt).getOrElse(2)
+    if (fmt > 3)
+      throw new UnsupportedLogFeatureException(
+        s"checkpoint v$version of $root uses layout format $fmt; this " +
+          "build reads <= 3 — upgrade the library to read this table")
+    fmt
+  }
+
+  /** A checkpoint header's table-scoped state (v1 document or v2
+    * `_meta.json` — both carry the same keys). `version` comes from the
+    * checkpoint's name.
+    */
+  private def ckptScalars(n: com.fasterxml.jackson.databind.JsonNode,
+                          version: Long): ScalarState = {
+    val txns = Map.newBuilder[String, Long]
+    Option(n.get("txns")).foreach(_.properties().forEach(e =>
+      txns += e.getKey -> e.getValue.asLong))
+    val cons = Map.newBuilder[String, String]
+    Option(n.get("constraints")).foreach(_.properties().forEach(e =>
+      cons += e.getKey -> e.getValue.asText()))
+    val dropped = Set.newBuilder[String]
+    Option(n.get("droppedCols")).foreach(_.elements()
+      .forEachRemaining(e => dropped += e.asText))
+    val colMap = Map.newBuilder[String, String]
+    Option(n.get("colMap")).foreach(_.properties().forEach(e =>
+      colMap += e.getKey -> e.getValue.asText()))
+    ScalarState(version, n.get("schemaDdl").asText, txns.result(),
+      cons.result(), dropped.result(), colMap.result())
+  }
+
+  /** Inverse of [[ckptScalars]]: version, schema, the four table-scoped
+    * maps (each omitted when empty) and the `minReader` stamp (omitted
+    * below rung 2), in that key order.
+    */
+  private def putCkptScalars(n: com.fasterxml.jackson.databind.node.ObjectNode,
+                             s: ScalarState, minReader: Int): Unit = {
+    n.put("version", s.version)
+    n.put("schemaDdl", s.schemaDdl)
+    // txn watermarks survive log truncation or idempotent replay breaks
+    if (s.txns.nonEmpty) {
+      val tn = n.putObject("txns")
+      s.txns.foreach { case (app, v) => tn.put(app, v) }
+    }
+    // constraints likewise outlive log truncation — losing one would
+    // silently stop enforcing it on every later write
+    if (s.constraints.nonEmpty) {
+      val cn = n.putObject("constraints")
+      s.constraints.foreach { case (name, sql) => cn.put(name, sql) }
+    }
+    // drop-column tombstones outlive log truncation — losing one would
+    // let a later write evolve the name back in over stale file bytes
+    if (s.droppedCols.nonEmpty) {
+      val dc = n.putArray("droppedCols")
+      s.droppedCols.toSeq.sorted.foreach(dc.add)
+    }
+    // the column mapping is version state like tombstones: losing it on
+    // a truncated log would make every renamed column read as null
+    if (s.colMap.nonEmpty) {
+      val cm = n.putObject("colMap")
+      s.colMap.foreach { case (l, p) => cm.put(l, p) }
+    }
+    if (minReader > 1) n.put("minReader", minReader)
+  }
+
+  /** A format-3 `_meta.json`: layout fields, then [[putCkptScalars]].
+    * `liveCount` is what lets [[resolveMeta]] gate the distributed tier
+    * without touching the per-file rows.
+    */
+  private def ckptMetaJson(liveCount: Long, legend: Seq[String],
+                           s: ScalarState, minReader: Int): String = {
+    val n = mapper.createObjectNode()
+    n.put("format", 3)
+    n.put("liveCount", liveCount)
+    if (legend.nonEmpty) {
+      val sc = n.putArray("statCols")
+      legend.foreach(sc.add)
+    }
+    putCkptScalars(n, s, minReader)
+    n.toString
+  }
+
+  /** A format-3 header's `statCols` legend: the stat key of each
+    * `min<i>`/`max<i>` column pair.
+    */
+  private def ckptLegend(
+      n: com.fasterxml.jackson.databind.JsonNode): IndexedSeq[String] = {
+    val b = IndexedSeq.newBuilder[String]
+    Option(n.get("statCols")).foreach(_.elements()
+      .forEachRemaining(e => b += e.asText))
+    b.result()
+  }
 
   /** History sidecar riding every v2 checkpoint: summary rows
     * ([[HistRow]] — no file lists) for every commit at-or-below the
@@ -5999,11 +6047,12 @@ object TxLog {
     val fs = fileSystem(spark, root)
     val dir = new Path(s"$root/$LogDirName")
     val store = CommitStore.forPath(dir)
-    val vs = (try store.list(fs, dir)
-              catch { case scala.util.control.NonFatal(_) =>
-                return None })
-      .map(_.getName).collect { case CkptDirV2(v) => v.toLong }
-      .sorted(Ordering[Long].reverse)
+    val names = (try store.list(fs, dir)
+                 catch { case scala.util.control.NonFatal(_) =>
+                   return None })
+      .map(_.getName)
+    val vs = ckptsIn(names).collect { case (v, c) if c.v2.isDefined => v }
+      .toSeq.reverse
     vs.iterator.flatMap { v =>
       val p = new Path(ckptPathV2(root, v), CkptHistName)
       try {
@@ -6057,16 +6106,11 @@ object TxLog {
     * log. Idempotent (checkpoints are derived state, safe to overwrite);
     * returns the checkpointed version.
     */
-  def checkpoint(spark: SparkSession, root: String): Option[Long] = {
+  def checkpoint(spark: SparkSession, root: String): Option[Long] =
     // resolve through the previous checkpoint + tail (never a raw replay):
     // a checkpoint must not forget state whose commits predate an earlier
     // checkpoint
-    if (spark.conf.get("spark.graft.checkpoint.format", "parquet") == "json") {
-      val snap = scala.util.Try(resolve(spark, root, None)).toOption
-        .getOrElse(return None)
-      checkpointV1(spark, root, snap)
-      Some(snap.version)
-    } else scala.util.Try(resolveMeta(spark, root, None)).toOption match {
+    scala.util.Try(resolveMeta(spark, root, None)).toOption match {
       case None => None
       case Some(Right(m)) =>
         // big table with a format-3 base: the new checkpoint derives
@@ -6077,60 +6121,37 @@ object TxLog {
         checkpointV2(spark, root, snap)
         Some(snap.version)
     }
-  }
 
-  /** The original single-JSON-document checkpoint (kept writable for
-    * compatibility testing via `spark.graft.checkpoint.format=json`;
-    * kept READABLE unconditionally).
+  /** Write the original single-JSON-document (v1) checkpoint at the
+    * current latest version — a fixture for building legacy logs (the
+    * format stays READABLE unconditionally; [[checkpoint]] writes only
+    * parquet).
     */
-  private def checkpointV1(spark: SparkSession, root: String,
-                           snap: Snapshot): Unit = {
+  private[graft] def writeLegacyCheckpointV1(spark: SparkSession,
+                                             root: String): Option[Long] = {
+    val snap = scala.util.Try(resolve(spark, root, None)).toOption
+      .getOrElse(return None)
     val n = mapper.createObjectNode()
-    n.put("version", snap.version)
-    n.put("schemaDdl", snap.schemaDdl)
+    val liveDvs = snap.dvs.view.filterKeys(snap.live.toSet).toMap
+    putCkptScalars(n, scalarsOf(Left(snap)),
+      minReaderOfState(snap.colMap, liveDvs, snap.droppedCols))
     val arr = n.putArray("live")
     snap.live.foreach(arr.add)
     // live files' stats only — a post-checkpoint rollback to a
     // pre-checkpoint version loses skipping for resurrected files
     // (conservative: they just stop pruning), never correctness
     statsToNode(n, snap.stats.full.view.filterKeys(snap.live.toSet).toMap)
-    // txn watermarks survive log truncation or idempotent replay breaks
-    if (snap.txns.nonEmpty) {
-      val tn = n.putObject("txns")
-      snap.txns.foreach { case (app, v) => tn.put(app, v) }
-    }
-    // constraints likewise outlive log truncation — losing one would
-    // silently stop enforcing it on every later write
-    if (snap.constraints.nonEmpty) {
-      val cn = n.putObject("constraints")
-      snap.constraints.foreach { case (name, sql) => cn.put(name, sql) }
-    }
     // live files' deletion vectors: losing one would resurrect its
     // deleted rows on a checkpoint-truncated log
-    val liveDvs = snap.dvs.view.filterKeys(snap.live.toSet).toMap
     if (liveDvs.nonEmpty) {
       val dn = n.putObject("dv")
       liveDvs.foreach { case (file, (path, rows)) =>
         val e = dn.putObject(file); e.put("path", path); e.put("rows", rows)
       }
     }
-    // drop-column tombstones outlive log truncation — losing one would
-    // let a later write evolve the name back in over stale file bytes
-    if (snap.droppedCols.nonEmpty) {
-      val dc = n.putArray("droppedCols")
-      snap.droppedCols.toSeq.sorted.foreach(dc.add)
-    }
-    // the column mapping is version state like tombstones: losing it on
-    // a truncated log would make every renamed column read as null
-    if (snap.colMap.nonEmpty) {
-      val cm = n.putObject("colMap")
-      snap.colMap.foreach { case (l, p) => cm.put(l, p) }
-    }
-    val mr = minReaderOfState(snap.colMap, liveDvs, snap.droppedCols)
-    if (mr > 1) n.put("minReader", mr)
-    val fs = fileSystem(spark, root)
-    val out = fs.create(ckptPath(root, snap.version), true)
+    val out = fileSystem(spark, root).create(ckptPath(root, snap.version), true)
     try out.write(n.toString.getBytes(UTF_8)) finally out.close()
+    Some(snap.version)
   }
 
   /** Parquet checkpoint writer (v2 — see [[CkptDirV2]]). The directory
@@ -6167,66 +6188,20 @@ object TxLog {
       .flatMap(f => fullStats.get(f).iterator.flatMap(_.keysIterator))
       .toSet.toIndexedSeq.sorted
     val keyIdx = statKeys.zipWithIndex.toMap
-    val rowSchema = StructType(
-      Seq(StructField("idx", LongType, nullable = false),
-          StructField("file", StringType, nullable = false),
-          StructField("dvPath", StringType, nullable = true),
-          StructField("dvRows", LongType, nullable = true)) ++
-        statKeys.indices.flatMap(i => Seq(
-          StructField(s"min$i", DoubleType, nullable = true),
-          StructField(s"max$i", DoubleType, nullable = true))))
     val rows: Seq[Row] = snap.live.zipWithIndex.map { case (f, i) =>
-      val st = fullStats.getOrElse(f, Map.empty[String, (Double, Double)])
-      val cells = new Array[Any](2 * statKeys.size)
-      st.foreach { case (k, (mn, mx)) =>
-        val j = keyIdx(k); cells(2 * j) = mn; cells(2 * j + 1) = mx
-      }
-      Row.fromSeq(Seq[Any](i.toLong, f,
-        liveDvs.get(f).map(_._1).orNull,
-        liveDvs.get(f).map(_._2).map(Long.box).orNull) ++ cells)
-    }
-    val meta = {
-      val n = mapper.createObjectNode()
-      n.put("format", 3)
-      // what lets [[resolveMeta]] gate the distributed tier WITHOUT
-      // touching the per-file rows; absent on older checkpoints, which
-      // simply keep the materialized path
-      n.put("liveCount", snap.live.size.toLong)
-      if (statKeys.nonEmpty) {
-        val sc = n.putArray("statCols")
-        statKeys.foreach(sc.add)
-      }
-      n.put("version", snap.version)
-      n.put("schemaDdl", snap.schemaDdl)
-      if (snap.txns.nonEmpty) {
-        val tn = n.putObject("txns")
-        snap.txns.foreach { case (app, v) => tn.put(app, v) }
-      }
-      if (snap.constraints.nonEmpty) {
-        val cn = n.putObject("constraints")
-        snap.constraints.foreach { case (name, sql) => cn.put(name, sql) }
-      }
-      if (snap.droppedCols.nonEmpty) {
-        val dc = n.putArray("droppedCols")
-        snap.droppedCols.toSeq.sorted.foreach(dc.add)
-      }
-      if (snap.colMap.nonEmpty) {
-        val cm = n.putObject("colMap")
-        snap.colMap.foreach { case (l, p) => cm.put(l, p) }
-      }
-      val mr = minReaderOfState(snap.colMap, liveDvs, snap.droppedCols)
-      if (mr > 1) n.put("minReader", mr)
-      n.toString
+      ckptRow(i.toLong, f, liveDvs.get(f),
+        fullStats.getOrElse(f, Map.empty), keyIdx)
     }
     // ~64k metadata-sized rows per part bounds both task count and
     // part size; a 10^6-file table writes ~16 parallel parts
-    publishCkptDir(spark, fs, root, dst,
+    publishCkptDir(spark, fs, root, snap.version,
       tmp => spark.createDataFrame(
           spark.sparkContext.parallelize(
             rows, math.max(1, rows.size / 65536)),
-          rowSchema)
+          ckptReadSchema(statKeys.size))
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString),
-      meta)
+      ckptMetaJson(snap.live.size.toLong, statKeys, scalarsOf(Left(snap)),
+        minReaderOfState(snap.colMap, liveDvs, snap.droppedCols)))
   }
 
   /** Read a v2 checkpoint directory back into a [[Snapshot]]: header
@@ -6255,41 +6230,17 @@ object TxLog {
 
   private def readCkptV2(spark: SparkSession, root: String,
                          version: Long): Snapshot = {
-    val fs = fileSystem(spark, root)
     val dir = ckptPathV2(root, version)
-    val in = fs.open(new Path(dir, CkptMetaName))
-    val n = try mapper.readTree(new String(in.readAllBytes(), UTF_8))
-            finally in.close()
-    val txnsB = Map.newBuilder[String, Long]
-    Option(n.get("txns")).foreach(_.properties().forEach(e =>
-      txnsB += e.getKey -> e.getValue.asLong))
-    val consB = Map.newBuilder[String, String]
-    Option(n.get("constraints")).foreach(_.properties().forEach(e =>
-      consB += e.getKey -> e.getValue.asText()))
-    val droppedB = Set.newBuilder[String]
-    Option(n.get("droppedCols")).foreach(_.elements()
-      .forEachRemaining(e => droppedB += e.asText))
-    val cmB = Map.newBuilder[String, String]
-    Option(n.get("colMap")).foreach(_.properties().forEach(e =>
-      cmB += e.getKey -> e.getValue.asText()))
-    checkReaderVersion(n, s"checkpoint v$version")
-    val fmt = Option(n.get("format")).map(_.asInt).getOrElse(2)
-    if (fmt > 3)
-      throw new UnsupportedLogFeatureException(
-        s"checkpoint v$version of $root uses layout format $fmt; this " +
-          "build reads <= 3 — upgrade the library to read this table")
+    val n = readNode(fileSystem(spark, root), new Path(dir, CkptMetaName))
+    val fmt = ckptFormat(n, root, version)
+    val scalars = ckptScalars(n, version)
     if (fmt == 3) {
       // format 3: live set + dv refs load eagerly (the live FILE LIST is
       // what a snapshot IS — every consumer needs it), stats stay behind
       // the view's pruned loaders. This is what bounds a 100k-file
       // resolve to O(files) driver rows instead of O(files × statCols)
       // decoded map cells.
-      val legend: IndexedSeq[String] =
-        Option(n.get("statCols")).map { a =>
-          val b = IndexedSeq.newBuilder[String]
-          a.elements().forEachRemaining(e => b += e.asText)
-          b.result()
-        }.getOrElse(IndexedSeq.empty)
+      val legend = ckptLegend(n)
       val rows = spark.read.schema(ckptReadSchema(0)).parquet(dir.toString)
         .select("idx", "file", "dvPath", "dvRows")
         .collect().sortBy(_.getLong(0))
@@ -6304,9 +6255,7 @@ object TxLog {
         () => readCkptStatsFull(dirStr, legend),
         c => readCkptStatsCol(dirStr, legend, c),
         Map.empty)
-      Snapshot(live, n.get("schemaDdl").asText, version, stats,
-        txnsB.result(), consB.result(), dvB.result(), droppedB.result(),
-        cmB.result())
+      snapshotOf(scalars, live, stats, dvB.result())
     } else {
       // format 2 (map-layout rows): readable forever; eager like v1
       val rows = spark.read.schema(CkptV2MapSchema).parquet(dir.toString)
@@ -6324,10 +6273,8 @@ object TxLog {
         if (!r.isNullAt(4))
           dvB += r.getString(1) -> ((r.getString(4), r.getLong(5)): DvRef)
       }
-      Snapshot(live, n.get("schemaDdl").asText, version,
-        StatsView.eager(statsB.result()),
-        txnsB.result(), consB.result(), dvB.result(), droppedB.result(),
-        cmB.result())
+      snapshotOf(scalars, live, StatsView.eager(statsB.result()),
+        dvB.result())
     }
   }
 
@@ -6642,7 +6589,10 @@ object TxLog {
     * stages for days). Checkpoint live sets count as references too — a
     * log whose pre-checkpoint entries were truncated (which readers
     * support) must not get its still-live files reaped as "never
-    * referenced". Returns the deleted root-relative paths.
+    * referenced" — so a checkpoint this build cannot read (a newer
+    * `minReader` or layout) refuses the whole call with
+    * [[UnsupportedLogFeatureException]], deleting nothing. Returns the
+    * deleted root-relative paths.
     */
   def cleanOrphans(spark: SparkSession, root: String,
                    olderThanMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
@@ -6651,22 +6601,22 @@ object TxLog {
     val logDir = new Path(s"$root/$LogDirName")
     val ckptLive: Set[String] =
       if (!fs.exists(logDir)) Set.empty
-      else fs.listStatus(logDir).toSeq
-        .collect {
-          case st if CkptFile.matches(st.getPath.getName) =>
-            val in = fs.open(st.getPath)
-            val n = try mapper.readTree(new String(in.readAllBytes(), UTF_8))
-                    finally in.close()
-            val it = n.get("live").elements()
-            val b = Set.newBuilder[String]
-            while (it.hasNext) b += it.next().asText()
-            b.result()
-          case st if CkptDirV2.matches(st.getPath.getName) =>
+      else ckptsIn(fs.listStatus(logDir).map(_.getPath.getName)).toSeq
+        .flatMap { case (v, c) =>
+          val v1Live =
+            if (c.v1.isEmpty) Nil else readCkptV1(spark, root, v).live
+          val v2Live = if (c.v2.isEmpty) Nil else {
+            val dir = ckptPathV2(root, v)
+            // a headerless dir (a crashed publication or delete) has no
+            // header to gate, but its rows still count as references
+            val header = new Path(dir, CkptMetaName)
+            if (fs.exists(header)) ckptFormat(readNode(fs, header), root, v)
             // v2 live set: one pruned column off the parquet rows
-            spark.read.schema(StructType(Seq(StructField("file", StringType))))
-              .parquet(st.getPath.toString)
-              .select("file").collect().map(_.getString(0)).toSet
-        }.foldLeft(Set.empty[String])(_ ++ _)
+            spark.read.schema(ckptReadSchema(0)).parquet(dir.toString)
+              .select("file").collect().map(_.getString(0)).toSeq
+          }
+          v1Live ++ v2Live
+        }.toSet
     val referenced = history(spark, root).flatMap(_.add).toSet ++ ckptLive
     val cutoff = System.currentTimeMillis() - olderThanMs
     def walk(p: Path): Seq[(String, Long)] =
@@ -6944,11 +6894,8 @@ object TxLog {
     val names = CommitStore.forPath(dir).list(fs, dir).map(_.getName)
     // both checkpoint formats anchor truncation; a version carrying both
     // forms is ONE checkpoint (two names to delete when it ages out)
-    val ckptNamesByV: Map[Long, Seq[String]] = names.collect {
-      case n @ CkptFile(v)  => v.toLong -> n
-      case n @ CkptDirV2(v) => v.toLong -> n
-    }.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val ckpts = ckptNamesByV.keys.toSeq.sorted
+    val ckptNamesByV = ckptsIn(names)
+    val ckpts = ckptNamesByV.keys.toSeq
     if (ckpts.isEmpty) return Seq.empty // nothing to anchor a truncation
     val horizon = ckpts.takeRight(keepCheckpoints).head
     // strictly BELOW the horizon: the horizon version's own entry stays,
@@ -6958,7 +6905,7 @@ object TxLog {
     val logVictims = names
       .collect { case n @ LogFile(v) if v.toLong < horizon => n }.sorted
     val ckptVictims = ckpts.dropRight(keepCheckpoints)
-      .flatMap(ckptNamesByV(_))
+      .flatMap(ckptNamesByV(_).all)
     if (logVictims.isEmpty && ckptVictims.isEmpty) return Seq.empty
     if (!force) {
       val commits = history(spark, root)
@@ -6989,7 +6936,7 @@ object TxLog {
     val fs = fileSystem(spark, root)
     val dir = new Path(s"$root/$LogDirName")
     if (!fs.exists(dir)) return Seq.empty
-    ckptVersionsOf(CommitStore.forPath(dir).list(fs, dir).map(_.getName))
+    ckptsIn(CommitStore.forPath(dir).list(fs, dir).map(_.getName)).keys.toSeq
   }
 
   /** One self-maintenance pass for a long-lived table: bin-pack the

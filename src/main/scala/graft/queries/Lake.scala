@@ -2190,17 +2190,8 @@ object Lake {
       (0 until 12).foreach { i =>
         TxLog.append(s,
           o.filter(pmod(col("k"), lit(12)) === i).coalesce(1), root)
-        if (i == 5) {
-          // legacy-writer checkpoint: v1 single-JSON at v5 (restore the
-          // prior format value — the conf is session-global)
-          val prev = s.conf.getOption("spark.graft.checkpoint.format")
-          s.conf.set("spark.graft.checkpoint.format", "json")
-          try TxLog.checkpoint(s, root)
-          finally prev match {
-            case Some(v) => s.conf.set("spark.graft.checkpoint.format", v)
-            case None    => s.conf.unset("spark.graft.checkpoint.format")
-          }
-        }
+        // legacy-writer checkpoint: v1 single-JSON at v5
+        if (i == 5) TxLog.writeLegacyCheckpointV1(s, root)
       }
       def ckptForms(): Set[String] = fs
         .listStatus(new Path(s"$root/${TxLog.LogDirName}")).toSeq

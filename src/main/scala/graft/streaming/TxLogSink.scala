@@ -37,8 +37,7 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * SELF-MAINTENANCE: a micro-batch sink fragments its table faster than
   * anything else (one small file + one log entry per batch, forever);
-  * `option("maintainEveryCommits", N)` — or the session conf
-  * `spark.graft.maintain.everyCommits` — runs [[TxLog.maintain]]
+  * `option("maintainEveryCommits", N)` runs [[TxLog.maintain]]
   * best-effort after every Nth batch THIS stream lands (bin-pack +
   * checkpoint + vacuum + log truncation), so a long-running stream's
   * table keeps a bounded live-file count and a bounded log tail without
@@ -82,12 +81,8 @@ final class TxLogSinkProvider extends StreamSinkProvider
     // auto-maintenance cadence: a streaming sink is the fastest
     // fragmenter a table has (one file + one log entry per micro-batch
     // forever), so the sink can run TxLog.maintain every N of ITS
-    // commits — opt-in via the sink option or the session conf
-    // spark.graft.maintain.everyCommits (option wins)
+    // commits — opt-in via the sink option
     val maintainEvery = parameters.get("maintainEveryCommits")
-      .orElse(Option(sqlContext.sparkSession.conf
-        .get(TxLogSink.MaintainEveryConf, null)).map(_.trim)
-        .filter(_.nonEmpty))
       .map { v =>
         val n =
           try v.toInt
@@ -103,11 +98,6 @@ final class TxLogSinkProvider extends StreamSinkProvider
     new TxLogSink(sqlContext.sparkSession, root, appId,
       partitionColumns, statsCols, maintainEvery)
   }
-}
-
-object TxLogSink {
-  /** Session conf twin of the sink option `maintainEveryCommits`. */
-  val MaintainEveryConf = "spark.graft.maintain.everyCommits"
 }
 
 private final class TxLogSink(spark: SparkSession, root: String,

@@ -6,7 +6,9 @@ import java.nio.file.Files
 
 /** Parquet checkpoint format (v2): distributed per-live-file rows plus an
   * `_meta.json` header, replacing the driver-built single-JSON-document
-  * v1 as the default. These specs pin the three format contracts:
+  * v1 (still readable; written only by the legacy fixture
+  * `TxLog.writeLegacyCheckpointV1`). These specs pin the three format
+  * contracts:
   * content invariance across a v2 checkpoint (including after log
   * truncation), full v1 back- and cross-compatibility on MIXED logs, and
   * every piece of version state (stats, DVs, txn watermarks,
@@ -24,9 +26,16 @@ class TxLogCheckpointV2Spec extends SparkSpec {
       .listFiles().map(_.getName).toSeq
       .filterNot(_.startsWith(".")).sorted // drop local-FS .crc sidecars
 
-  private def withJsonCheckpoints[A](body: => A): A = {
-    spark.conf.set("spark.graft.checkpoint.format", "json")
-    try body finally spark.conf.unset("spark.graft.checkpoint.format")
+  /** An "old writer"'s log: appends v0..v9 with the auto-cadence held
+    * off, then a legacy v1 JSON checkpoint at v9.
+    */
+  private def legacyLogToV9(root: String): Unit = {
+    spark.conf.set("spark.graft.checkpoint.interval", "1000000")
+    try (0 until 10).foreach { i =>
+      TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s")
+        .repartition(1), root)
+    } finally spark.conf.unset("spark.graft.checkpoint.interval")
+    TxLog.writeLegacyCheckpointV1(spark, root)
   }
 
   test("v2 checkpoint: content-invariant resolution from checkpoint + tail") {
@@ -57,15 +66,10 @@ class TxLogCheckpointV2Spec extends SparkSpec {
 
   test("mixed log: v1 checkpoints from an old writer, v2 from the new one") {
     val root = tmpRoot()
-    // "old" writer: first cadence checkpoint (v9) lands as v1 JSON
-    withJsonCheckpoints {
-      (0 until 12).foreach { i =>
-        TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s")
-          .repartition(1), root)
-      }
-    }
+    // "old" writer: its v9 checkpoint is v1 JSON
+    legacyLogToV9(root)
     // "new" writer continues the same table: v19 checkpoint is parquet
-    (12 until 22).foreach { i =>
+    (10 until 22).foreach { i =>
       TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s")
         .repartition(1), root)
     }
@@ -89,13 +93,12 @@ class TxLogCheckpointV2Spec extends SparkSpec {
 
   test("a v1-only log (pre-upgrade table) resolves unchanged") {
     val root = tmpRoot()
-    withJsonCheckpoints {
-      (0 until 12).foreach { i =>
-        TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s")
-          .repartition(1), root)
-      }
-      TxLog.vacuumLog(spark, root, keepCheckpoints = 1)
+    legacyLogToV9(root)
+    (10 until 12).foreach { i =>
+      TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s")
+        .repartition(1), root)
     }
+    TxLog.vacuumLog(spark, root, keepCheckpoints = 1)
     TxLog.readLatest(spark, root).count() shouldBe 12L
     // and the NEXT explicit checkpoint upgrades the log to v2 in place
     TxLog.checkpoint(spark, root) shouldBe Some(11L)
@@ -395,5 +398,44 @@ class TxLogCheckpointV2Spec extends SparkSpec {
     claimTmp.exists() shouldBe false
     // the local-FS checksum sidecars (.crc) were NOT touched
     TxLog.readLatest(spark, root).count() shouldBe 12L
+  }
+
+  test("_meta.json key order is pinned, and both v2 writers emit the same header bytes") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpRoot()
+    TxLog.append(spark,
+      (1L to 20L).map(k => (k, s"r$k", s"x$k")).toDF("id", "s", "extra")
+        .repartition(1), root, statsCols = Seq("id"))
+    TxLog.appendIdempotent(spark,
+      Seq((21L, "r21", "x21")).toDF("id", "s", "extra").repartition(1),
+      root, appId = "loader", txnVersion = 3L, statsCols = Seq("id"))
+    TxLog.addConstraint(spark, root, "id_pos", "id > 0")
+    TxLog.deleteVectored(spark, root, col("id") <= 2L) // DV
+    TxLog.dropColumns(spark, root, Seq("extra"))       // tombstone
+    TxLog.renameColumn(spark, root, "s", "body")       // column mapping
+    // a format-3 base for the incremental writer, then a tail above it
+    TxLog.checkpoint(spark, root) shouldBe Some(5L)
+    TxLog.append(spark, Seq((30L, "r30")).toDF("id", "body").repartition(1),
+      root, statsCols = Seq("id"))
+    TxLog.checkpoint(spark, root) shouldBe Some(6L)
+    TxLog.lastResolveDistributed shouldBe false
+    val dir = s"$root/${TxLog.LogDirName}/00000000000000000006.checkpoint.parquet"
+    def meta(): String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_meta.json")), "UTF-8")
+    val classic = meta()
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(classic)
+      .fieldNames().asScala.toSeq shouldBe Seq("format", "liveCount",
+        "statCols", "version", "schemaDdl", "txns", "constraints",
+        "droppedCols", "colMap", "minReader")
+    // wipe it and re-checkpoint through the incremental writer
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(p, true) shouldBe true
+    spark.conf.set("spark.graft.meta.distributedThreshold", "0")
+    try {
+      TxLog.checkpoint(spark, root) shouldBe Some(6L)
+      TxLog.lastResolveDistributed shouldBe true
+    } finally spark.conf.unset("spark.graft.meta.distributedThreshold")
+    meta() shouldBe classic
   }
 }

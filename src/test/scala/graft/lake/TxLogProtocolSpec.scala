@@ -188,4 +188,40 @@ class TxLogProtocolSpec extends SparkSpec {
       TxLog.append(spark, Seq((9L, "x")).toDF("id", "s"), root)
     }
   }
+
+  test("cleanOrphans refuses a checkpoint it cannot read and deletes nothing") {
+    val root = tmpRoot()
+    (0 until 3).foreach { i =>
+      TxLog.append(spark, Seq((i.toLong, s"v$i")).toDF("id", "s"), root)
+    }
+    TxLog.checkpoint(spark, root) shouldBe Some(2L)
+    // an orphan: a data file no commit or checkpoint references, aged
+    // past any threshold
+    val src = new java.io.File(root).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val orphan = Paths.get(root, "part-orphan.parquet")
+    Files.copy(src.toPath, orphan)
+    Files.setLastModifiedTime(orphan,
+      java.nio.file.attribute.FileTime.fromMillis(0L))
+    val meta = Paths.get(
+      s"$root/${TxLog.LogDirName}/00000000000000000002.checkpoint.parquet",
+      "_meta.json")
+    val orig = new String(Files.readAllBytes(meta), "UTF-8")
+    Files.deleteIfExists(meta.resolveSibling("._meta.json.crc"))
+    Seq(orig.replaceFirst("\"format\":3", "\"format\":4"),
+        orig.replaceFirst("\"format\":3", "\"format\":3,\"minReader\":9"))
+      .foreach { bumped =>
+        Files.write(meta, bumped.getBytes("UTF-8"))
+        intercept[TxLog.UnsupportedLogFeatureException] {
+          TxLog.cleanOrphans(spark, root, olderThanMs = 0L)
+        }
+        Files.exists(orphan) shouldBe true
+      }
+    // the readable header lets the reap through
+    Files.write(meta, orig.getBytes("UTF-8"))
+    TxLog.cleanOrphans(spark, root, olderThanMs = 0L) should contain(
+      "part-orphan.parquet")
+    Files.exists(orphan) shouldBe false
+    TxLog.readLatest(spark, root).count() shouldBe 3L
+  }
 }
