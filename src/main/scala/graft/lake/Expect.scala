@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions.{count, lit, sum, when}
   *  - [[TxLog.appendChecked]]: gate an ACID append — violations are
   *    counted inside the staged write itself and the COMMIT IS WITHHELD
   *    if any expectation fails. Nothing becomes visible (the staged files
-  *    are unreferenced orphans, reaped by [[TxLog.cleanOrphans]]), which
-  *    is exactly the constraint semantics of a log-format table: a
-  *    violated batch costs one staged write, never a corrupt table.
+  *    are deleted before the throw), which is exactly the constraint
+  *    semantics of a log-format table: a violated batch costs one staged
+  *    write, never a corrupt table.
   *
   * Scale: an expectation is one conditional sum folded into the write
   * job's aggregation buffer — zero shuffles, zero extra scans, per-row

@@ -1096,19 +1096,14 @@ object TxLog {
 
   /** Distributed write of `df` into the table's partition layout under
     * unique, not-yet-committed names. Returns the added files'
-    * root-relative paths and the batch schema DDL.
+    * root-relative paths and the batch schema DDL. Called only through
+    * [[stageBatch]].
     *
-    * `spark.graft.optimizeWrite=true` repartitions the batch on its
-    * partition columns first: without it, N input partitions × P
-    * partition values spray up to N×P files per commit (the small-file
-    * flood every partitioned streaming/ETL sink suffers at scale); with
-    * it, each partition value is written by the tasks that own its key
-    * range — one-ish file per partition value per commit, Delta's
-    * optimizeWrite shape. Off by default: it adds a shuffle, and batches
-    * already clustered by the caller (the common case in this codebase's
-    * queries) would pay it for nothing. Unpartitioned batches are
-    * right-sized through [[sizedForStage]] (`sized = false` opts a
-    * caller with its own layout machinery out wholesale).
+    * Batches are right-sized through [[sizedForStage]] (`sized = false`
+    * opts a caller with its own layout machinery out wholesale). A
+    * caller that wants one file per partition value spells that layout
+    * itself — `df.repartition(col(p))` at the plan root — and
+    * [[sizedForStage]] keeps it verbatim.
     */
   private def stage(df: DataFrame, root: String,
                     partitionCols: Seq[String],
@@ -1143,16 +1138,11 @@ object TxLog {
             s"$root — pre-rename files still hold bytes under it; " +
             "rename the batch column, or OVERWRITE the table first")
     }
-    val toWrite0 =
-      if (partitionCols.nonEmpty &&
-          spark.conf.getOption("spark.graft.optimizeWrite").contains("true"))
-        df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      // partitioned batches ride the same sliver gate: a W-wide batch
-      // sprays up to W x P files, and in the sliver regime a coalesce
-      // collapses that to ~P (one writer task emits one file per value)
-      // without optimizeWrite's shuffle
-      else if (sized) sizedForStage(df)
-      else df
+    // partitioned batches ride the same sliver gate: a W-wide batch
+    // sprays up to W x P files, and in the sliver regime a coalesce
+    // collapses that to ~P (one writer task emits one file per value)
+    // without a shuffle
+    val toWrite0 = if (sized) sizedForStage(df) else df
     val toWrite = toPhysicalCols(toWrite0, mapping)
     val w = toWrite.write.mode(SaveMode.Overwrite)
       .option("compression", "snappy")
@@ -1187,6 +1177,76 @@ object TxLog {
     fs.delete(new Path(stageDir), true)
     (relsWithSizes.map(_._1), df.schema.toDDL, relsWithSizes.toMap)
   }
+
+  /** A batch staged by [[stageBatch]]: its files, schema DDL, per-file
+    * stats (sizes included) keyed under `colMap`, the column mapping it
+    * was staged with, and the constraint set it was validated against
+    * (None when the operation does not validate) — the two commit-time
+    * fences [[commitStaged]] builds from it.
+    */
+  private final case class Staged(adds: Seq[String], ddl: String,
+                                  stats: FileStats,
+                                  colMap: Map[String, String],
+                                  cons: Option[Map[String, String]])
+
+  /** Nothing staged: a commit that adds no files (a fully-matched
+    * DELETE, a pure vector delete) on `current`'s schema and mapping.
+    */
+  private def nothingStaged(current: Snapshot): Staged =
+    Staged(Seq.empty, current.schemaDdl, Map.empty, current.colMap, None)
+
+  /** The write half of every data-adding commit: [[stage]] `df`, run the
+    * caller's `precheck` on the staged files (expectations, a partition
+    * scope), check the table's CHECK constraints ([[enforceConstraints]];
+    * DELETE and compact only remove or repack committed rows, so they
+    * skip it), fire [[postEnforceHook]], then compute the batch's stats
+    * under the same `colMap` the files were written with. Any failure
+    * after the files are staged deletes them before it propagates — a
+    * refused batch leaves no orphan. A failure inside the later
+    * [[commitLoop]] does not: a claim whose outcome is ambiguous must
+    * keep its files, and [[cleanOrphans]] reclaims the losers.
+    */
+  private def stageBatch(spark: SparkSession, df: DataFrame, root: String,
+                         parts: Seq[String], statsCols: Seq[String],
+                         colMap: Map[String, String], operation: String,
+                         sized: Boolean = true,
+                         precheck: Seq[String] => Unit = _ => ()): Staged = {
+    val (adds, ddl, sizes) = stage(df, root, parts, colMap, sized)
+    try {
+      precheck(adds)
+      val cons =
+        if (operation == "delete" || operation == "compact") None
+        else Some(enforceConstraints(spark, root, adds, ddl, operation))
+      postEnforceHook()
+      Staged(adds, ddl,
+        withSizes(computeStats(spark, root, adds, statsCols, colMap = colMap), sizes),
+        colMap, cons)
+    } catch { case t: Throwable =>
+      deleteStaged(spark, root, adds); throw t
+    }
+  }
+
+  /** The one commit of the writers without a `basedOn` fence — the three
+    * appends, [[upsertPartitions]], [[replacePartitions]]: add the staged
+    * files, remove `removes(live)`, merge the schema per
+    * [[committedDdl]], and refuse the commit when the winning state
+    * changed the mapping of a staged column or the constraint set the
+    * batch was validated against.
+    */
+  private def commitStaged(spark: SparkSession, root: String,
+                           operation: String, parts: Seq[String],
+                           staged: Staged,
+                           txn: Option[(String, Long)] = None)(
+                           removes: (() => Seq[String]) => Seq[String]): Long =
+    commitLoop(spark, root, operation, parts,
+      { (commits, live) =>
+        (staged.adds, removes(live),
+          committedDdl(spark, commits, staged.ddl, operation, root))
+      },
+      staged.stats, txn = txn,
+      mappingFence = Some((staged.colMap,
+        StructType.fromDDL(staged.ddl).fieldNames.toSeq)),
+      consFence = staged.cons)
 
   /** Optimistic commit loop: compute the delta against the CURRENT log
     * state, then claim the next version with an atomic create-if-absent;
@@ -1749,24 +1809,16 @@ object TxLog {
     // ONE metadata resolution feeds the stage mapping and the stats
     // job's key translation (stage/computeStats would otherwise each
     // re-resolve just to learn the column mapping)
-    val preMap = colMapForStage(spark, root)
-    val (adds, ddl, sizes) = stage(df, root, partitionCols, colMap = preMap)
-    val enfCons = enforceConstraints(spark, root, adds, ddl, "append")
-    postEnforceHook()
-    commitLoop(spark, root, "append", partitionCols,
-      { (commits, _) =>
-        (adds, Seq.empty, committedDdl(spark, commits, ddl, "append", root))
-      },
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = preMap), sizes),
-      mappingFence = Some((preMap,
-        StructType.fromDDL(ddl).fieldNames.toSeq)),
-      consFence = Some(enfCons))
+    val staged = stageBatch(spark, df, root, partitionCols, statsCols,
+      colMapForStage(spark, root), "append")
+    commitStaged(spark, root, "append", partitionCols, staged)(_ => Seq.empty)
   }
 
   /** Test seam for the enforce->commit race window (no-op in
-    * production): lets a spec commit a constraint change exactly between
-    * a batch's validation and its commit attempt, proving commitLoop's
-    * consFence closes the window.
+    * production), fired by every [[stageBatch]] after validation: lets a
+    * spec commit a constraint change exactly between a batch's
+    * validation and its commit attempt, proving commitLoop's consFence
+    * closes the window — or fail a batch whose files are already staged.
     */
   private[lake] var postEnforceHook: () => Unit = () => ()
 
@@ -1807,19 +1859,10 @@ object TxLog {
                        statsCols: Seq[String] = Seq.empty): Option[Long] = {
     val pre = scala.util.Try(resolveScalars(spark, root)).toOption
     if (pre.exists(_.txns.get(appId).exists(_ >= txnVersion))) return None
-    val preMap = pre.map(_.colMap)
-      .getOrElse(colMapForStage(spark, root))
-    val (adds, ddl, sizes) = stage(df, root, partitionCols, colMap = preMap)
-    val enfCons = enforceConstraints(spark, root, adds, ddl, "append")
-    try Some(commitLoop(spark, root, "append", partitionCols,
-      { (commits, _) =>
-        (adds, Seq.empty, committedDdl(spark, commits, ddl, "append", root))
-      },
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = preMap), sizes),
-      txn = Some((appId, txnVersion)),
-      mappingFence = Some((preMap,
-        StructType.fromDDL(ddl).fieldNames.toSeq)),
-      consFence = Some(enfCons)))
+    val staged = stageBatch(spark, df, root, partitionCols, statsCols,
+      pre.map(_.colMap).getOrElse(colMapForStage(spark, root)), "append")
+    try Some(commitStaged(spark, root, "append", partitionCols, staged,
+      txn = Some((appId, txnVersion)))(_ => Seq.empty))
     catch { case _: AlreadyCommitted => None }
   }
 
@@ -1854,29 +1897,23 @@ object TxLog {
   /** [[append]] gated by data-quality expectations ([[Expect]]): the
     * violation counters ride the staged write itself (an `observe` node —
     * no second scan), and the COMMIT IS WITHHELD when any expectation
-    * fails — the table never exposes the bad batch (the staged files are
-    * unreferenced orphans until [[cleanOrphans]] reaps them). Throws
-    * [[Expect.ExpectationViolation]] with per-expectation counts.
+    * fails — the table never exposes the bad batch, and its staged files
+    * are deleted before the throw. Expectations are checked before the
+    * table's CHECK constraints, so no constraint scan runs for a batch
+    * they refuse. Throws [[Expect.ExpectationViolation]] with
+    * per-expectation counts.
     */
   def appendChecked(spark: SparkSession, df: DataFrame, root: String,
                     expectations: Seq[Expect.Expectation],
                     partitionCols: Seq[String] = Seq.empty,
                     statsCols: Seq[String] = Seq.empty): Long = {
     val (observed, obs) = Expect.observed(df, expectations)
-    val preMap = colMapForStage(spark, root)
-    val (adds, ddl, sizes) = stage(observed, root, partitionCols,
-      colMap = preMap)
-    val bad = Expect.violations(obs)
-    if (bad.nonEmpty) throw new Expect.ExpectationViolation(bad)
-    val enfCons = enforceConstraints(spark, root, adds, ddl, "append")
-    commitLoop(spark, root, "append", partitionCols,
-      { (commits, _) =>
-        (adds, Seq.empty, committedDdl(spark, commits, ddl, "append", root))
-      },
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = preMap), sizes),
-      mappingFence = Some((preMap,
-        StructType.fromDDL(ddl).fieldNames.toSeq)),
-      consFence = Some(enfCons))
+    val staged = stageBatch(spark, observed, root, partitionCols, statsCols,
+      colMapForStage(spark, root), "append", precheck = { _ =>
+        val bad = Expect.violations(obs)
+        if (bad.nonEmpty) throw new Expect.ExpectationViolation(bad)
+      })
+    commitStaged(spark, root, "append", partitionCols, staged)(_ => Seq.empty)
   }
 
   /** Replace the whole table content with `df` (logically — prior files
@@ -1896,9 +1933,8 @@ object TxLog {
       s"overwrite operation must be a full-state rewrite op: $operation")
     // full rewrite: files land under the LOGICAL names and the commit's
     // op clears the column mapping (+ tombstones, per foldDropped)
-    val (adds, ddl, sizes) = stage(df, root, partitionCols, colMap = Map.empty)
-    val enfCons = enforceConstraints(spark, root, adds, ddl, operation,
-      replaceSchema = true)
+    val staged = stageBatch(spark, df, root, partitionCols, statsCols,
+      Map.empty, operation)
     // `txn`: a (appId, version) watermark riding the replace — the
     // derived-table shape (an index REBUILT from its source records the
     // source version it summarizes, so incremental refreshes know where
@@ -1907,13 +1943,8 @@ object TxLog {
     // kept the old contents while the caller's sibling artifacts were
     // already replaced — the mixed-index bug).
     commitLoop(spark, root, operation, partitionCols,
-      { (commits, live) =>
-        (adds, live(), ddl)
-      },
-      // overwrite staged under LOGICAL names and clears the mapping
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = Map.empty), sizes),
-      txn = txn, txnFence = false,
-      consFence = Some(enfCons))
+      (_, live) => (staged.adds, live(), staged.ddl),
+      staged.stats, txn = txn, txnFence = false, consFence = staged.cons)
   }
 
   /** Partition-level upsert with SNAPSHOT semantics: logically removes the
@@ -1929,19 +1960,11 @@ object TxLog {
                        partitionCols: Seq[String],
                        statsCols: Seq[String] = Seq.empty): Long = {
     require(partitionCols.nonEmpty, "partition upsert needs partition columns")
-    val preMap = colMapForStage(spark, root)
-    val (adds, ddl, sizes) = stage(df, root, partitionCols, colMap = preMap)
-    val enfCons = enforceConstraints(spark, root, adds, ddl, "upsert")
-    val touchedDirs = adds.map(relDir).distinct
-    commitLoop(spark, root, "upsert", partitionCols,
-      { (commits, live) =>
-        (adds, live().filter(f => touchedDirs.contains(relDir(f))),
-          committedDdl(spark, commits, ddl, "upsert", root))
-      },
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = preMap), sizes),
-      mappingFence = Some((preMap,
-        StructType.fromDDL(ddl).fieldNames.toSeq)),
-      consFence = Some(enfCons))
+    val staged = stageBatch(spark, df, root, partitionCols, statsCols,
+      colMapForStage(spark, root), "upsert")
+    val touchedDirs = staged.adds.map(relDir).distinct
+    commitStaged(spark, root, "upsert", partitionCols, staged)(
+      live => live().filter(f => touchedDirs.contains(relDir(f))))
   }
 
   /** Statically-scoped partition overwrite (Hive/Spark's
@@ -1975,28 +1998,19 @@ object TxLog {
       partitionFilter.forall { case (k, v) =>
         segs.contains(s"$k=${escapePartitionValue(v)}") }
     }
-    val (adds, ddl, sizes) = stage(df, root, parts, colMap = current.colMap)
-    val escaped = adds.filterNot(f => inScope(relDir(f)))
-    if (escaped.nonEmpty) {
-      deleteStaged(spark, root, adds)
-      throw new IllegalArgumentException(
-        s"replacePartitions batch writes outside its scope " +
-          s"(${partitionFilter.map { case (k, v) => s"$k=$v" }.mkString(", ")}): " +
-          s"e.g. ${escaped.head} — filter the batch or widen the scope")
-    }
-    val enfCons =
-      enforceConstraints(spark, root, adds, ddl, "overwrite_partitions")
-    commitLoop(spark, root, "overwrite_partitions", parts,
-      { (commits, live) =>
-        (adds, live().filter(f => inScope(relDir(f))),
-          committedDdl(spark, commits, ddl, "overwrite_partitions", root))
-      },
-      withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
-      // overwrite-wins needs no version fence, but the staged files DO
-      // carry current.colMap's physical names — same race as appends
-      mappingFence = Some((current.colMap,
-        StructType.fromDDL(ddl).fieldNames.toSeq)),
-      consFence = Some(enfCons))
+    val staged = stageBatch(spark, df, root, parts, statsCols,
+      current.colMap, "overwrite_partitions", precheck = { adds =>
+        val escaped = adds.filterNot(f => inScope(relDir(f)))
+        if (escaped.nonEmpty)
+          throw new IllegalArgumentException(
+            s"replacePartitions batch writes outside its scope " +
+              s"(${partitionFilter.map { case (k, v) => s"$k=$v" }.mkString(", ")}): " +
+              s"e.g. ${escaped.head} — filter the batch or widen the scope")
+      })
+    // overwrite-wins needs no version fence, but the staged files DO
+    // carry current.colMap's physical names — same race as appends
+    commitStaged(spark, root, "overwrite_partitions", parts, staged)(
+      live => live().filter(f => inScope(relDir(f))))
   }
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere`): atomically
@@ -2037,16 +2051,14 @@ object TxLog {
       case Some(s) => s.unionByName(df, allowMissingColumns = true)
       case None    => df
     }
-    val (adds, ddl, sizes) = stage(staged, root, parts,
-      colMap = current.colMap)
-    enforceConstraints(spark, root, adds, ddl, "replace_where")
+    val Staged(adds, ddl, stats, _, _) = stageBatch(spark, staged, root,
+      parts, statsCols, current.colMap, "replace_where")
     commitLoop(spark, root, "replace_where", parts, { (commits, _) =>
       // append-style schema merge: a zero-match replaceWhere staging a
       // narrower batch must NOT narrow the committed table schema
       (adds, matchedFiles,
         committedDdl(spark, commits, ddl, "replace_where", root))
-    }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
-      basedOn = Some(current.version))
+    }, stats, basedOn = Some(current.version))
   }
 
   // -------------------------------------------------------------------
@@ -2505,16 +2517,17 @@ object TxLog {
   }
 
   /** Enforce the table's constraints on freshly STAGED files, between
-    * stage and commit — the one seam every data-adding path funnels
-    * through. Reading the staged parquet back (columnar, pruned to the
-    * referenced columns) costs one bounded scan of the NEW bytes only and
-    * never recomputes the caller's DataFrame. All constraints evaluate in
-    * ONE job. On violation the staged files are deleted and the commit
-    * never happens — the table never exposes the bad batch.
+    * stage and commit — called only by [[stageBatch]], the one seam every
+    * data-adding path funnels through. Reading the staged parquet back
+    * (columnar, pruned to the referenced columns) costs one bounded scan
+    * of the NEW bytes only and never recomputes the caller's DataFrame.
+    * All constraints evaluate in ONE job. On violation it throws, and
+    * [[stageBatch]] deletes the staged files — the table never exposes
+    * the bad batch.
     *
     * The staged files are read with the schema they will carry after the
-    * commit (table ∪ batch for append-family, the batch schema alone when
-    * `replaceSchema` — overwrite): a column the batch omits reads NULL,
+    * commit (table ∪ batch for append-family, the batch schema alone for
+    * a full rewrite — [[isFullRewrite]]): a column the batch omits reads NULL,
     * and NULL satisfies CHECK — exactly how the committed files will
     * behave. A constraint referencing a column absent from that schema
     * (an overwrite dropping it) fails loudly instead of silently passing
@@ -2522,8 +2535,7 @@ object TxLog {
     */
   private def enforceConstraints(spark: SparkSession, root: String,
                                  adds: Seq[String], batchDdl: String,
-                                 operation: String,
-                                 replaceSchema: Boolean = false): Map[String, String] = {
+                                 operation: String): Map[String, String] = {
     // scalars only (constraints, schema, mapping): batch validation must
     // not materialize a big table's live set — it scans the STAGED files
     val snap = scala.util.Try(resolveScalars(spark, root)).toOption
@@ -2532,6 +2544,7 @@ object TxLog {
     // against — commitLoop's consFence refuses the commit if the winning
     // state's set differs (validated-under-stale-rules)
     if (cons.isEmpty || adds.isEmpty) return cons
+    val replaceSchema = isFullRewrite(operation)
     val batchS = StructType.fromDDL(batchDdl)
     val schema =
       if (replaceSchema) batchS
@@ -2557,13 +2570,11 @@ object TxLog {
     cons.foreach { case (name, sql) =>
       val missing = constraintRefs(spark, sql)
         .filterNot(r => schema.exists(_.name.equalsIgnoreCase(r)))
-      if (missing.nonEmpty) {
-        deleteStaged(spark, root, adds)
+      if (missing.nonEmpty)
         throw new IllegalArgumentException(
           s"$operation to $root drops column(s) ${missing.mkString(", ")} " +
             s"referenced by constraint $name (CHECK ($sql)) — drop the " +
             "constraint first")
-      }
     }
     import org.apache.spark.sql.functions.{count, when}
     // staged files carry PHYSICAL names on a mapped table (stage wrote
@@ -2584,13 +2595,11 @@ object TxLog {
     val row = staged.agg(aggs.head, aggs.tail: _*).head()
     val bad = names.zipWithIndex
       .map { case (n, i) => n -> row.getLong(i) }.filter(_._2 > 0)
-    if (bad.nonEmpty) {
-      deleteStaged(spark, root, adds)
+    if (bad.nonEmpty)
       throw new IllegalStateException(
         s"$operation to $root violates constraint(s): " +
           bad.map { case (n, c) => s"$n (CHECK (${cons(n)})): $c row(s)" }
             .mkString("; "))
-    }
     cons
   }
 
@@ -2784,15 +2793,14 @@ object TxLog {
       case Some(s) => s.unionByName(updates, allowMissingColumns = true)
       case None    => updates
     }
-    val (adds, ddl, sizes) = stage(staged, root, partitionCols,
-      colMap = current.colMap)
-    enforceConstraints(spark, root, adds, ddl, operation)
+    val Staged(adds, ddl, stats, _, _) = stageBatch(spark, staged, root,
+      partitionCols, statsCols, current.colMap, operation)
     commitLoop(spark, root, operation, partitionCols, { (commits, _) =>
       // same schema policy as appends: a merge whose updates matched NO
       // live file stages only the update rows, and committing their raw
       // schema would narrow the table (or change a type) silently
       (adds, matchedFiles, committedDdl(spark, commits, ddl, operation, root))
-    }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
+    }, stats,
       metrics = extraMetrics ++
         Map("numMatchedFiles" -> matchedFiles.size.toLong,
           "numAddedFiles" -> adds.size.toLong),
@@ -3170,9 +3178,8 @@ object TxLog {
     // has its count from phase 1, so it skips the Observation and its
     // per-row predicate re-evaluation entirely.
     val obs = org.apache.spark.sql.Observation()
-    val (adds, ddl, sizes) =
-      if (rewriteFiles.isEmpty) (Seq.empty[String], current.schemaDdl,
-        Map.empty[String, Long])
+    val Staged(adds, ddl, stats, _, _) =
+      if (rewriteFiles.isEmpty) nothingStaged(current)
       else {
         val src0 = readLiveFiles(spark, root, current.schemaDdl,
           rewriteFiles, current)
@@ -3180,22 +3187,19 @@ object TxLog {
           if (operation == "delete") src0
           else src0.observe(obs, sum(when(coalesce(condition, lit(false)),
             1L).otherwise(0L)).as("n_match"))
-        stage(rewrite(src, condition), root, parts,
-          colMap = current.colMap)
+        stageBatch(spark, rewrite(src, condition), root, parts, statsCols,
+          current.colMap, operation)
       }
     val matchedRows =
       if (operation == "delete") deleteRows
       else Option(obs.get.getOrElse("n_match", null))
         .collect { case n: Long => n }.getOrElse(0L)
-    // UPDATE can SET a row into violation; DELETE only removes rows it
-    // never changes, so its survivors stay valid by construction
-    if (operation != "delete") enforceConstraints(spark, root, adds, ddl, operation)
     commitLoop(spark, root, operation, parts, { (commits, _) =>
       // rewrites read the full current schema, so the merge is a no-op
       // here — kept for uniformity with the other non-replacing commits
       (adds, matchedFiles,
         committedDdl(spark, commits, ddl, operation, root))
-    }, withSizes(computeStats(spark, root, adds, statsCols, colMap = current.colMap), sizes),
+    }, stats,
       metrics = Map(rowKey -> matchedRows,
         "numRewrittenFiles" -> rewriteFiles.size.toLong,
         "numRemovedFiles" -> fullFiles.size.toLong,
@@ -5565,8 +5569,8 @@ object TxLog {
     * the DV-tagged probe scan; `rows` the batch appended in the same
     * commit (None for a pure delete). In order: per-file match counts
     * ([[liveMatchCounts]]); the no-op return when nothing matched and
-    * `skipIfUnmatched`; staging and constraint check of `rows`; the
-    * cumulative sidecar; the stale-base-fenced commit — and the
+    * `skipIfUnmatched`; [[stageBatch]] of `rows`; the cumulative
+    * sidecar; the stale-base-fenced commit — and the
     * sidecar's reap when that commit never lands (nothing else ever
     * reclaims an unreferenced sidecar; staged adds become ordinary
     * orphans for cleanOrphans). `metrics` maps (matched rows, vectored
@@ -5580,14 +5584,8 @@ object TxLog {
                              metrics: (Long, Long, Long) => Map[String, Long]): Long = {
     val newCounts = liveMatchCounts(current, operation, positions).toMap
     if (skipIfUnmatched && newCounts.isEmpty) return current.version
-    val (adds, ddl, sizes) = rows match {
-      case Some(df) =>
-        val staged = stage(df, root, parts, colMap = current.colMap)
-        enforceConstraints(spark, root, staged._1, staged._2, operation)
-        staged
-      case None =>
-        (Seq.empty[String], current.schemaDdl, Map.empty[String, Long])
-    }
+    val Staged(adds, ddl, stats, _, _) = rows.fold(nothingStaged(current))(
+      stageBatch(spark, _, root, parts, statsCols, current.colMap, operation))
     val (sidecarRel, dvMap) =
       if (newCounts.isEmpty) (None, Map.empty[String, DvRef])
       else {
@@ -5606,8 +5604,7 @@ object TxLog {
           case Some(_) => committedDdl(spark, commits, ddl, operation, root)
         }
         (adds, Seq.empty, schemaDdl)
-      }, withSizes(computeStats(spark, root, adds, statsCols,
-        colMap = current.colMap), sizes), dv = dvMap,
+      }, stats, dv = dvMap,
       metrics = metrics(newCounts.values.sum, newCounts.size.toLong,
         adds.size.toLong),
       basedOn = Some(current.version))
@@ -6555,8 +6552,8 @@ object TxLog {
     // Union root sizedForStage cannot see through) — re-coalescing it
     // would undo the clusterBy skipping granularity minOutputFiles exists
     // to protect
-    val (adds, ddl, sizes) = stage(packed, root, parts,
-      colMap = current.colMap, sized = false)
+    val Staged(adds, ddl, stats, _, _) = stageBatch(spark, packed, root,
+      parts, statCols, current.colMap, "compact", sized = false)
     commitLoop(spark, root, "compact", parts, { (commits, live) =>
       val gone = removed.filterNot(live().toSet)
       if (gone.nonEmpty)
@@ -6575,7 +6572,7 @@ object TxLog {
           s"compact source ${dvChanged.head} gained/changed a deletion " +
             s"vector concurrently at $root — re-run the compact")
       (adds, removed, commits.lastOption.map(_.schemaDdl).getOrElse(ddl))
-    }, withSizes(computeStats(spark, root, adds, statCols, colMap = current.colMap), sizes),
+    }, stats,
       metrics = Map("numPackedFiles" -> removed.size.toLong,
         "numOutputFiles" -> adds.size.toLong))
   }

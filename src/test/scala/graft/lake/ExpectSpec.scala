@@ -60,8 +60,8 @@ class ExpectSpec extends SparkSpec {
     // commit withheld: table state is exactly the clean batch
     TxLog.latestVersion(spark, root) shouldBe Some(0L)
     TxLog.readLatest(spark, root).count() shouldBe 2L
-    // the rejected batch's staged files are unreferenced orphans, reapable
-    TxLog.cleanOrphans(spark, root, olderThanMs = 0L) should not be empty
+    // the rejected batch's staged files are deleted before the throw
+    TxLog.cleanOrphans(spark, root, olderThanMs = 0L) shouldBe empty
     TxLog.readLatest(spark, root).count() shouldBe 2L
   }
 }

@@ -378,20 +378,19 @@ class TxLogSpec extends SparkSpec {
     e2.getMessage should include("no decision")
   }
 
-  test("optimizeWrite collapses the N-partitions x P-values file spray") {
+  test("a caller-side repartition collapses the N-partitions x P-values file spray") {
     val data = (1L to 400L).map(i => (i, s"p${i % 4}")).toDF("id", "p")
       .repartition(8) // 8 input partitions x 4 values = up to 32 files
     val sprayRoot = tmpRoot()
     TxLog.append(spark, data, sprayRoot, Seq("p"))
     val sprayed = TxLog.history(spark, sprayRoot).head.add.size
 
+    // the caller spells the layout; stage keeps a root repartition verbatim
     val packedRoot = tmpRoot()
-    spark.conf.set("spark.graft.optimizeWrite", "true")
-    try TxLog.append(spark, data, packedRoot, Seq("p"))
-    finally spark.conf.unset("spark.graft.optimizeWrite")
+    TxLog.append(spark, data.repartition(col("p")), packedRoot, Seq("p"))
     val packed = TxLog.history(spark, packedRoot).head.add.size
 
-    sprayed should be > 4 // the spray this conf exists to stop
+    sprayed should be > 4 // the spray the caller's layout stops
     packed shouldBe 4     // one file per partition value
     // identical content either way
     TxLog.readLatest(spark, packedRoot).orderBy("id")
