@@ -782,7 +782,7 @@ private[graft] object GraftDataSource {
   }
 
   /** Per-column probe-value sets from the TOP-LEVEL equality/IN
-    * conjuncts — the bloom-skipping tier's input. Only top-level AND
+    * conjuncts — point sets and bloom probes. Only top-level AND
     * members qualify (an OR branch can't narrow the file set), and null
     * values contribute no probe: `x = NULL` matches nothing (Spark
     * rewrites it to IsNull anyway) and a NULL inside an IN list can
@@ -802,19 +802,18 @@ private[graft] object GraftDataSource {
     }
 
   /** Per-column [lo, hi] windows from the TOP-LEVEL conjuncts' numeric
-    * comparisons — the stats-skipping tier. Only top-level AND members
-    * qualify (an OR branch can't narrow the file set), strict
-    * comparisons widen to inclusive (skipping is necessary-condition
-    * only), and non-numeric values don't participate (stats live in
-    * double space).
+    * range comparisons (equalities ride [[equalityProbes]]). Only
+    * top-level AND members qualify (an OR branch can't narrow the file
+    * set), strict comparisons widen to inclusive (skipping is
+    * necessary-condition only); non-numeric values don't participate.
     */
   def boundsOf(filters: Array[Filter]): Seq[(String, Double, Double)] = {
     def num(v: Any): Option[Double] = v match {
       // NaN contributes NO bound: under Spark's NaN-largest total order
       // `x <= NaN` still matches every non-NaN row, but hi=NaN makes
-      // boundsKeep's `mn <= hi` false for every stats-bearing file —
-      // silently skipping them all (mirror of the NaN-KEEP rule
-      // boundsKeep applies to file stats)
+      // the range's `mn <= hi` false for every stats-bearing file —
+      // silently skipping them all (mirror of the NaN-KEEP rule the
+      // stats tier applies to file stats)
       case n: java.lang.Number =>
         val d = n.doubleValue(); if (d.isNaN) None else Some(d)
       case _ => None
@@ -825,7 +824,6 @@ private[graft] object GraftDataSource {
       windows(a) = (math.max(clo, lo), math.min(chi, hi))
     }
     filters.foreach {
-      case EqualTo(a, v)            => num(v).foreach(d => narrow(a, d, d))
       case GreaterThan(a, v)        => num(v).foreach(d => narrow(a, d, Double.MaxValue))
       case GreaterThanOrEqual(a, v) => num(v).foreach(d => narrow(a, d, Double.MaxValue))
       case LessThan(a, v)           => num(v).foreach(d => narrow(a, Double.MinValue, d))

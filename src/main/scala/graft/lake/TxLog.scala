@@ -565,20 +565,61 @@ object TxLog {
     */
   val FileSizeKey = "__bytes"
 
-  /** The ONE stats-keep predicate every skipping tier uses: can a file
-    * with recorded bounds `b` intersect [lo, hi]? Missing bounds keep
-    * the file (skipping is necessary-condition only) — and so do NaN
-    * bounds: Spark's min/max propagate NaN as the largest double, so a
-    * single NaN row would otherwise make `mx >= lo` FALSE and silently
-    * skip a file that holds matching rows. Centralized because every
-    * pruned read ([[prunedSnapshot]]; [[prunedSnapMeta]] spells it in
-    * SQL) and the merge probe prune with it — a divergent copy is a
-    * wrong-results bug waiting to happen.
+  /** The ONE stats-keep predicate (per column) of the driver tier, the
+    * distributed tier (as a UDF) and the merge probe: can a file with
+    * bounds `b` hold a match? Missing or NaN bounds keep the file (min/max
+    * propagate NaN as the largest double, so a NaN row would skip it).
+    * Comparisons are primitive: `-0.0 == 0.0` as in Spark's equality,
+    * where `Double.compare` would drop a file holding the other zero.
     */
-  private def boundsKeep(b: Option[(Double, Double)],
-                         lo: Double, hi: Double): Boolean = b match {
-    case Some((mn, mx)) if !mn.isNaN && !mx.isNaN => mx >= lo && mn <= hi
-    case _ => true
+  private sealed trait Skip extends Serializable {
+    protected def hits(mn: Double, mx: Double): Boolean
+    final def keep(b: Option[(Double, Double)]): Boolean = b match {
+      case Some((mn, mx)) if !mn.isNaN && !mx.isNaN => hits(mn, mx)
+      case _ => true
+    }
+  }
+  private final case class RangeSkip(lo: Double, hi: Double) extends Skip {
+    protected def hits(mn: Double, mx: Double) = mx >= lo && mn <= hi
+  }
+  /** Some point lies in [mn, mx], each tested on its own (never their
+    * hull): the first of the ascending points `>= mn`, by binary search.
+    */
+  private final case class PointSkip(points: Array[Double]) extends Skip {
+    protected def hits(mn: Double, mx: Double) = {
+      var (lo, hi) = (0, points.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (points(mid) < mn) lo = mid + 1 else hi = mid
+      }
+      lo < points.length && points(lo) <= mx
+    }
+  }
+
+  /** An equality/IN probe as a point set, when Spark's `IN` compares it
+    * exactly or in double space (the stats'): non-NaN `Number`s on a
+    * numeric column (decimals to precision 15, whose bounds are correctly
+    * rounded), never rounded to float (integral on float, or the reverse).
+    */
+  private def pointSkip(schema: StructType, column: String,
+                        values: Seq[Any]): Option[(String, PointSkip)] = {
+    import org.apache.spark.sql.types.{ByteType, DecimalType, FloatType, IntegerType, NumericType, ShortType}
+    val nonNull = values.filter(_ != null)
+    def exact(dt: org.apache.spark.sql.types.DataType, v: Any) = (dt, v) match {
+      case (FloatType, _: java.lang.Byte | _: java.lang.Short |
+            _: java.lang.Integer | _: java.lang.Long) => false
+      case (ByteType | ShortType | IntegerType | LongType, _: java.lang.Float) => false
+      case (d: DecimalType, n: Number) => d.precision <= 15 && !n.doubleValue.isNaN
+      case (_: NumericType, n: Number) => !n.doubleValue.isNaN
+      case _ => false
+    }
+    schema.find(_.name.equalsIgnoreCase(column))
+      .filter(f => nonNull.nonEmpty && nonNull.forall(exact(f.dataType, _)))
+      .map { f =>
+        val points = nonNull.map(_.asInstanceOf[Number].doubleValue).toArray
+        java.util.Arrays.sort(points)
+        (f.name, PointSkip(points))
+      }
   }
 
   /** Merge stage-time byte sizes into a commit's stats map. */
@@ -2660,99 +2701,64 @@ object TxLog {
     require(keyCols.nonEmpty, s"$operation needs key columns")
     import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit, max, min}
     // every key this operation touches: upserted + deleted — PERSISTED:
-    // the key projection feeds four separate actions (the uniqueness/
-    // range metadata job, the optional bloom-hash collect, the
-    // matched-file probe's broadcast build, and the rewrite's anti-join
-    // broadcast), each of which would otherwise re-evaluate the
-    // caller's update pipeline from scratch (its shuffle included)
+    // the key collect, the probe's broadcast and the rewrite's anti-join
+    // would each re-run the caller's update pipeline (shuffle included)
     val touchedKeys = (deleteKeys match {
       case Some(d) => updates.select(keyCols.map(col): _*)
         .unionByName(d.select(keyCols.map(col): _*))
       case None => updates.select(keyCols.map(col): _*)
     }).persist()
     try {
-    // ONE metadata-sized job over the touched keys: per-key multiplicity
-    // (the uniqueness contract) and the first key column's value range
-    // (for stats pruning below)
+    // ONE bounded collect, capped one row past the broadcast gate: the
+    // key multiplicities (uniqueness), count and values (the probe's points)
     val keyHead = keyCols.head
-    // try_cast: a non-numeric (e.g. uuid string) key must yield null
-    // bounds = "range pruning off", not an ANSI cast error killing the
-    // merge (bloom pruning below is the tier that handles such keys)
-    val kstat = touchedKeys.groupBy(keyCols.map(col): _*)
+    val keyLimit = broadcastKeyLimit(spark)
+    val groups = touchedKeys.groupBy(keyCols.map(col): _*).count()
+      .limit(math.min(keyLimit + 1, Int.MaxValue.toLong).toInt).collect()
+    val bounded = groups.length <= keyLimit
+    // above the gate one metadata job answers uniqueness and the key hull
+    // (try_cast: a uuid-like key means no range pruning, not an ANSI error)
+    lazy val kstat = touchedKeys.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("_n"))
       .agg(max(col("_n")).as("_maxn"),
         min(org.apache.spark.sql.functions
           .expr(s"try_cast(`$keyHead` AS DOUBLE)")).as("_klo"),
         max(org.apache.spark.sql.functions
           .expr(s"try_cast(`$keyHead` AS DOUBLE)")).as("_khi"),
-        count(lit(1)).as("_nkeys"),
-        // non-castable touched keys: their range contribution is lost in
-        // _klo/_khi, so bounds computed from the castable subset alone
-        // would wrongly prune files holding them — pruning must switch
-        // off entirely when any such key exists
+        // a non-castable key is missing from _klo/_khi, so its presence
+        // must switch range pruning off (the hull would under-cover it)
         count(org.apache.spark.sql.functions
           .expr(s"CASE WHEN `$keyHead` IS NOT NULL AND " +
             s"try_cast(`$keyHead` AS DOUBLE) IS NULL THEN 1 END"))
           .as("_badk")).head()
-    require(kstat.isNullAt(0) || kstat.getLong(0) <= 1,
+    val maxN =
+      if (bounded) groups.map(_.getLong(keyCols.size)).maxOption.getOrElse(0L)
+      else if (kstat.isNullAt(0)) 0L
+      else kstat.getLong(0)
+    require(maxN <= 1,
       s"$operation touched keys must be unique (one upsert OR delete per key)")
-    val nKeys = if (kstat.isNullAt(3)) 0L else kstat.getLong(3)
 
     val current = resolve(spark, root, None)
-    // STATS-PRUNED probe: a live file whose committed [min, max] for the
-    // first key column cannot intersect the updates' key range cannot
-    // contain a matched key — drop it from the probe scan before any IO
-    // (necessary-condition pruning on keyCols.head; files without stats,
-    // or non-castable keys, are conservatively kept). On a key-clustered
-    // table this turns the probe from a full scan into a scan of the
-    // touched key range — the difference between O(table) and O(delta) at
-    // 100 TB.
-    val probeLive =
-      if (kstat.isNullAt(1) || kstat.isNullAt(2) ||
-          kstat.getLong(4) > 0) current.live
-      else {
-        val (klo, khi) = (kstat.getDouble(1), kstat.getDouble(2))
-        val physKey = physName(current.colMap, keyHead) // physical stats key
-        val ks = current.stats.col(physKey) // pruned: one stat column read
-        current.live.filter(f => boundsKeep(ks.get(f), klo, khi))
-      }
-    // BLOOM-PRUNED probe, the tier below the range pruning above: on a
-    // hash-distributed key the [min, max] test keeps everything, but a
-    // bloom index (buildBloomIndex on keyCols.head) still answers "can
-    // this file hold any updated key?" per file. Applied only when the
-    // update key set is under the broadcast gate (its distinct hashes are
-    // then a driver-safe collect — same budget as the key broadcast
-    // below) and the updates' key type matches the table's (xxhash64 is
-    // type-sensitive; a mismatch would probe the wrong hash space and
-    // wrongly skip files). False positives cost a scanned file; false
-    // negatives cannot happen.
+    // PRUNED probe, O(delta) not O(table): the pruned read's own file
+    // choice ([[prunedLive]]) on the snapshot this commit fences on.
+    // Under the gate every touched key (upserted AND deleted) is a point;
+    // above it the key hull is a range and the bloom stays off. Only when
+    // the key types match: stats and xxhash64 are both type-sensitive.
     val tableKeyType = StructType.fromDDL(current.schemaDdl)
       .find(_.name == keyHead).map(_.dataType)
-    val bloomProbeLive =
-      if (nKeys > 0 && nKeys <= broadcastKeyLimit(spark) &&
-          tableKeyType.contains(updates.schema(keyHead).dataType) &&
-          fileSystem(spark, root).exists(bloomDir(root, keyHead))) {
-        // hashes come from the TOUCHED keys, not just the upserts — a
-        // bloom skip of a file holding only to-be-deleted keys would be
-        // a false negative losing the delete
-        val hashes = touchedKeys
-          .select(org.apache.spark.sql.functions.xxhash64(col(keyHead)))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        bloomKeepFiles(spark, root, keyHead, hashes,
-          current.copy(live = probeLive))
-      } else probeLive
-    val snap = taggedVisible(spark, root, current.copy(live = bloomProbeLive))
-    // SIZE-GATED key probe: broadcasting the update keys is the right
-    // plan for CDC-sized deltas (no shuffle of the table side), but a
-    // backfill-sized merge would ship the whole key set to every executor
-    // and OOM the driver collecting it. Above the gate, leave the join
-    // unhinted — Spark's own size estimation + AQE then pick a shuffle
-    // strategy (the table side shuffles once; still file-granular). The
-    // key COUNT is free: it rides the same metadata job as the
-    // uniqueness check above.
-    val keys =
-      if (nKeys <= broadcastKeyLimit(spark)) broadcast(touchedKeys)
-      else touchedKeys
+    val probed =
+      if (!tableKeyType.contains(updates.schema(keyHead).dataType)) current
+      else if (bounded)
+        prunedLive(spark, root, current, Nil,
+          Seq(keyHead -> groups.map(_.get(0)).distinct.toSeq))
+      else if (kstat.isNullAt(1) || kstat.isNullAt(2) ||
+               kstat.getLong(3) > 0) current
+      else prunedLive(spark, root, current,
+        Seq((keyHead, kstat.getDouble(1), kstat.getDouble(2))), Nil)
+    val snap = taggedVisible(spark, root, probed)
+    // SIZE-GATED key broadcast: above the gate (a backfill-sized key set
+    // would OOM the driver) the join is left to Spark's own planning
+    val keys = if (bounded) broadcast(touchedKeys) else touchedKeys
     // MERGE-ON-READ mode (spark.graft.merge.mode=vector): instead of
     // rewriting every file holding a matched key, vector the matched
     // rows' positions and append the updates — the CDC-merge shape at
@@ -3885,49 +3891,33 @@ object TxLog {
       .map(_.getPath.getName.stripPrefix("bloom_")).sorted
   }
 
-  /** The files of `snap` that might contain ANY of the probe hashes,
-    * per the column's bloom index (callers check the sidecar exists);
-    * files without an index row (written after the build) are
-    * conservatively kept.
+  /** The files of `snap` that might hold ANY probe hash, per the
+    * column's bloom index (callers check the sidecar exists). Bitsets
+    * test inside executors; only REJECTED names reach the driver, and
+    * files without an index row are kept. A read racing a (re)build of
+    * this DERIVED state degrades to NO pruning, never a failed query.
     */
   private def bloomKeepFiles(spark: SparkSession, root: String,
                              column: String, probeHashes: Seq[Long],
                              snap: Snapshot): Seq[String] = {
-    val dir = bloomDir(root, column)
-    // DERIVED-state read rule: the sidecar has no commit protocol by
-    // design, so a read racing a concurrent (re)build can find the dir
-    // with only an in-flight _temporary inside (schema inference fails)
-    // — degrade to NO pruning, never fail the query that probed
-    try withBloomReadBatch(spark)(
-      bloomKeepFilesUnsafe(spark, dir, probeHashes, snap))
-    catch { case scala.util.control.NonFatal(_) => snap.live }
-  }
-
-  private def bloomKeepFilesUnsafe(spark: SparkSession, dir: Path,
-                                   probeHashes: Seq[Long],
-                                   snap: Snapshot): Seq[String] = {
     import spark.implicits._
-    // Executor-side probe: the bitsets are deserialized and tested where
-    // they already live, and only the names of bloom-REJECTED files come
-    // back — never a bitset. What crosses to the driver is bounded by the
-    // file-name list (which the driver already holds as snap.live); the
-    // bitsets themselves (~GBs at 1M files) stay distributed. Files
-    // without an index row never appear in `rejected`, so they are
-    // conservatively kept.
     val hashes = probeHashes.toArray
-    val rejected = spark.read.schema(BloomSidecarSchema).parquet(dir.toString)
-      .select(org.apache.spark.sql.functions.col("file"),
-        org.apache.spark.sql.functions.col("bloom"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (f, bytes) =>
-        if (bytes == null) None
-        else {
-          val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-          if (hashes.exists(bloom.mightContainLong)) None else Some(f)
+    try withBloomReadBatch(spark) {
+      val rejected = spark.read.schema(BloomSidecarSchema)
+        .parquet(bloomDir(root, column).toString)
+        .select(org.apache.spark.sql.functions.col("file"),
+          org.apache.spark.sql.functions.col("bloom"))
+        .as[(String, Array[Byte])]
+        .flatMap { case (f, bytes) =>
+          if (bytes == null) None
+          else {
+            val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+            if (hashes.exists(bloom.mightContainLong)) None else Some(f)
+          }
         }
-      }
-      .collect().toSet
-    snap.live.filterNot(rejected.contains)
+        .collect().toSet
+      snap.live.filterNot(rejected.contains)
+    } catch { case scala.util.control.NonFatal(_) => snap.live }
   }
 
   /** `xxhash64` of each probe value AS THE COLUMN'S TYPE, bit-identical
@@ -3999,23 +3989,26 @@ object TxLog {
     * its exact predicates, so widened bounds and bloom false positives
     * only cost scanned files, never rows. [[readStatsPruned]],
     * [[readRange]], [[readRanges]], [[readEquals]],
-    * [[bloomScanFileCount]] and [[plannedScanSizes]] are this file
-    * selection plus their own filter or measure.
+    * [[bloomScanFileCount]], [[plannedScanSizes]] and the merge probe
+    * are this file selection plus their own filter or measure.
     *
-    *  - Stats tier: committed min/max narrow the live set by `bounds`
-    *    ([[boundsKeep]]: missing or NaN stats keep the file).
-    *  - Bloom tier: each equality/IN conjunct on a bloom-indexed column
-    *    drops the files whose filter rejects every non-null probe value;
-    *    files without an index row are kept. Unindexed or complex-typed
-    *    columns and null-only probes prune nothing. Each tier only
-    *    REMOVES files, so they compose in any order and subset.
+    *  - Stats tier: one [[Skip]] per column over committed min/max —
+    *    each bound a range, each equality/IN a point set when
+    *    [[pointSkip]] admits it.
+    *  - Bloom tier: only on the stats survivors, and only when two or
+    *    more survive (its job reads the whole sidecar to save at most
+    *    the one file the scan would open anyway). Each equality/IN on a
+    *    bloom-indexed column drops the files whose filter rejects every
+    *    non-null probe; files without an index row are kept. Each tier
+    *    only REMOVES files, so they compose in any order and subset.
     *  - Where: a table whose checkpoint records more live files than
     *    `spark.graft.meta.distributedThreshold` prunes distributed over
     *    the checkpoint rows ([[prunedSnapMeta]]) and collects only the
-    *    survivors; any other prunes its resolved live set on the driver.
-    *  - Seams: [[lastStatsPrune]] is set when `bounds` is non-empty or
-    *    there are no equalities, [[lastBloomPrune]] whenever there are
-    *    equalities.
+    *    survivors; any other prunes its live set on the driver.
+    *  - Seams: [[lastStatsPrune]] = (stats survivors, live) whenever the
+    *    stats tier ran (a bound, a point set, or no equality at all);
+    *    [[lastBloomPrune]] = (kept, stats survivors) whenever there are
+    *    equalities, with kept = survivors when the bloom is skipped.
     */
   def readPrunedScan(spark: SparkSession, root: String,
                      bounds: Seq[(String, Double, Double)],
@@ -4044,27 +4037,46 @@ object TxLog {
   private def prunedSnapshot(spark: SparkSession, root: String,
                              bounds: Seq[(String, Double, Double)],
                              equalities: Seq[(String, Seq[Any])],
-                             version: Option[Long]): Snapshot = {
-    val snap = resolveMeta(spark, root, version) match {
-      case Right(m) =>
-        return prunedSnapMeta(spark, root, m, bounds, equalities)
-      case Left(s) => s
+                             version: Option[Long]): Snapshot =
+    resolveMeta(spark, root, version) match {
+      case Right(m) => prunedSnapMeta(spark, root, m, bounds, equalities)
+      case Left(s) => prunedLive(spark, root, s, bounds, equalities)
     }
+
+  /** A pruned read's [[Skip]]s, keyed by PHYSICAL stat key. */
+  private def skipsOf(schema: StructType, colMap: Map[String, String],
+                      bounds: Seq[(String, Double, Double)],
+                      equalities: Seq[(String, Seq[Any])]): Seq[(String, Skip)] =
+    (bounds.map { case (c, lo, hi) => (c, RangeSkip(lo, hi)) } ++
+      equalities.flatMap { case (c, vs) => pointSkip(schema, c, vs) })
+      .map { case (c, skip) => (physName(colMap, c), skip) }
+
+  /** Record the tier seams ([[readPrunedScan]] says when each is set). */
+  private def notePrune(statsRan: Boolean, hasEqualities: Boolean,
+                        kept: Int, survivors: Int, total: Int): Unit = {
+    if (statsRan) lastStatsPrune = Some((survivors, total))
+    if (hasEqualities) lastBloomPrune = Some((kept, survivors))
+  }
+
+  /** [[prunedSnapshot]]'s driver tier, on a resolved snapshot. */
+  private def prunedLive(spark: SparkSession, root: String, snap: Snapshot,
+                         bounds: Seq[(String, Double, Double)],
+                         equalities: Seq[(String, Seq[Any])]): Snapshot = {
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val physBounds = bounds.map { case (c, lo, hi) =>
-      (snap.stats.col(physName(snap.colMap, c)), lo, hi)
-    }
-    val statsKept = snap.live.filter(f =>
-      physBounds.forall { case (cs, lo, hi) => boundsKeep(cs.get(f), lo, hi) })
-    if (bounds.nonEmpty || equalities.isEmpty)
-      lastStatsPrune = Some((statsKept.size, snap.live.size))
-    val kept = equalities.foldLeft(statsKept) { case (live, (c, values)) =>
-      bloomProbe(spark, root, schema, c, values).fold(live) {
-        case (name, hashes) =>
-          bloomKeepFiles(spark, root, name, hashes, snap.copy(live = live))
+    val skips = skipsOf(schema, snap.colMap, bounds, equalities)
+    val cols = skips.map { case (pc, skip) => (snap.stats.col(pc), skip) }
+    val survivors = snap.live.filter(f =>
+      cols.forall { case (cs, skip) => skip.keep(cs.get(f)) })
+    val kept =
+      if (survivors.size <= 1) survivors
+      else equalities.foldLeft(survivors) { case (live, (c, values)) =>
+        bloomProbe(spark, root, schema, c, values).fold(live) {
+          case (name, hashes) =>
+            bloomKeepFiles(spark, root, name, hashes, snap.copy(live = live))
+        }
       }
-    }
-    if (equalities.nonEmpty) lastBloomPrune = Some((kept.size, statsKept.size))
+    notePrune(skips.nonEmpty || equalities.isEmpty, equalities.nonEmpty,
+      kept.size, survivors.size, snap.live.size)
     snap.copy(live = kept)
   }
 
@@ -5008,64 +5020,61 @@ object TxLog {
     (files, base.size.toLong + deadInBase)
   }
 
-  /** Distributed twin of [[prunedSnapshot]]'s driver tier: evaluate
-    * the bounds-keep predicate (the SQL spelling of [[boundsKeep]],
-    * null/NaN keep included) and the bloom rejections ON the checkpoint
-    * rows, and collect only the SURVIVORS — plus the driver-evaluated
-    * touched files, conservatively kept through the bloom tier (their
-    * index rows may predate them). Returns a [[Snapshot]] whose live
-    * set is the kept files, carrying exactly the per-file state the
-    * downstream [[snapshot]] builder reads: the survivors' dv refs and
-    * their `__bytes` stat (the log-served file index's input).
+  /** Distributed twin of [[prunedLive]]: the same [[Skip]]s (as UDFs)
+    * and bloom tests run ON the checkpoint rows and only SURVIVORS are
+    * collected, plus the touched files (kept through the bloom tier);
+    * each carries what [[snapshot]] reads: dv ref and `__bytes` stat.
     */
   private def prunedSnapMeta(spark: SparkSession, root: String,
                              m: MetaSnapshot,
                              bounds: Seq[(String, Double, Double)],
                              equalities: Seq[(String, Seq[Any])]): Snapshot = {
-    import org.apache.spark.sql.functions.{col, isnan, lit}
+    import org.apache.spark.sql.functions.{col, count, lit, udf}
     val schema = StructType.fromDDL(m.schemaDdl)
-    val physBounds = bounds.map { case (c, lo, hi) =>
-      (physName(m.colMap, c), lo, hi) }
-    val statKeys = (physBounds.map(_._1) :+ FileSizeKey).distinct
-    val keep = physBounds.map { case (pc, lo, hi) =>
-      if (!m.legend.contains(pc)) lit(true)
-      else {
-        // backticked: a stat key is a COLUMN NAME, and a bare col()
-        // would parse any dot in it as struct nesting
-        val (mn, mx) = (col(s"`mn:$pc`"), col(s"`mx:$pc`"))
-        mn.isNull || isnan(mn) || isnan(mx) || (mx >= lo && mn <= hi)
+    val skips = skipsOf(schema, m.colMap, bounds, equalities)
+    val statKeys = (skips.map(_._1) :+ FileSizeKey).distinct
+    val keep = skips.collect { case (pc, skip) if m.legend.contains(pc) =>
+      val keepUdf = udf { (mn: java.lang.Double, mx: java.lang.Double) =>
+        skip.keep(if (mn == null || mx == null) None
+                  else Some((mn.doubleValue, mx.doubleValue)))
       }
+      // backticked: a bare col() would parse a dot in the key as nesting
+      keepUdf(col(s"`mn:$pc`"), col(s"`mx:$pc`"))
     }.foldLeft(lit(true))(_ && _)
-    val afterBounds =
+    val survivorsDf =
       exceptTouched(ckptLiveDF(spark, m, statKeys, withDv = true),
         m.touchedAll).filter(keep)
     val (touchedLive, touchedInBase) = touchedState(spark, m, statKeys)
-    val touchedKept = touchedLive.filter(t => physBounds.forall {
-      case (pc, lo, hi) => boundsKeep(t.stats.get(pc), lo, hi) })
+    val touchedKept = touchedLive.filter(t =>
+      skips.forall { case (pc, skip) => skip.keep(t.stats.get(pc)) })
     val total = m.ckptLiveCount - touchedInBase + touchedLive.size
-    // the bloom tier runs DISTRIBUTED, before any collect: for a pure
-    // point lookup (no bounds) the stats tier keeps everything, and
-    // collecting it first would re-materialize the full live set. So
-    // the seams report the COMPOSED kept count (one collect, no count
-    // pass per tier)
-    val afterBloom = equalities.foldLeft(afterBounds) {
-      case (df, (c, values)) =>
-        bloomProbe(spark, root, schema, c, values).fold(df) {
-          case (name, hashes) =>
+    val probes = equalities.flatMap { case (c, values) =>
+      bloomProbe(spark, root, schema, c, values) }
+    // the bloom runs DISTRIBUTED, before any collect; its survivor-count
+    // gate rides the SAME collect: a one-row count, cross-joined in for
+    // the gate and unioned in (file = null) for the seams
+    val (rows, survivors) =
+      if (probes.isEmpty) {
+        val r = survivorsDf.collect().toSeq
+        (r, r.size + touchedKept.size)
+      } else {
+        val n = survivorsDf.agg(count(lit(1)).as("__n"))
+        val skipBloom = col("__n") + touchedKept.size <= 1
+        val afterBloom = probes.foldLeft(survivorsDf.crossJoin(n)) {
+          case (df, (name, hashes)) =>
             // same derived-state read rule as bloomKeepFiles: a sidecar
             // mid-(re)build reads conservative, never fails the query
-            try bloomFilterDF(spark, root, name, hashes.toArray, df)
+            try bloomFilterDF(spark, root, name, hashes.toArray, df, skipBloom)
             catch { case scala.util.control.NonFatal(_) => df }
         }
-    }
-    val rows =
-      if (equalities.nonEmpty) withBloomReadBatch(spark)(afterBloom.collect())
-      else afterBloom.collect()
-    val kept = rows.length + touchedKept.size
-    // same gating as the driver tier (see readPrunedScan)
-    if (bounds.nonEmpty || equalities.isEmpty)
-      lastStatsPrune = Some((kept, total.toInt))
-    if (equalities.nonEmpty) lastBloomPrune = Some((kept, total.toInt))
+        val out = withBloomReadBatch(spark)(
+          afterBloom.unionByName(n, allowMissingColumns = true).collect())
+        val (nRow, r) = out.toSeq.partition(_.getAs[String]("file") == null)
+        (r, nRow.head.getAs[Long]("__n").toInt + touchedKept.size)
+      }
+    val kept = rows.size + touchedKept.size
+    notePrune(skips.nonEmpty || equalities.isEmpty, equalities.nonEmpty,
+      kept, survivors, total.toInt)
     val live = rows.map(_.getAs[String]("file")).toSeq ++
       touchedKept.map(_.file)
     val dvs = (rows.flatMap { r =>
@@ -5073,29 +5082,25 @@ object TxLog {
         r.getAs[String]("file") -> ((p, r.getAs[Long]("dvRows")): DvRef))
     } ++ touchedKept.flatMap(t => t.dv.map(t.file -> _))).toMap
     val hasBytes = m.legend.contains(FileSizeKey)
-    val sizes: FileStats = (rows.flatMap { r =>
-      if (!hasBytes || r.isNullAt(r.fieldIndex(s"mn:$FileSizeKey"))) None
-      else {
+    val sizes: FileStats = (rows.collect {
+      case r if hasBytes && !r.isNullAt(r.fieldIndex(s"mn:$FileSizeKey")) =>
         val b = r.getDouble(r.fieldIndex(s"mn:$FileSizeKey"))
-        Some(r.getAs[String]("file") ->
-          Map(FileSizeKey -> (b, b)))
-      }
+        r.getAs[String]("file") -> Map(FileSizeKey -> (b, b))
     } ++ touchedKept.flatMap(t => t.stats.get(FileSizeKey).map(b =>
       t.file -> Map(FileSizeKey -> b)))).toMap
     Snapshot(live, m.schemaDdl, m.version, StatsView.eager(sizes),
       m.txns, m.constraints, dvs, m.droppedCols, m.colMap)
   }
 
-  /** One bloom sidecar applied distributed: left-join the candidate
-    * files with the index rows and keep unindexed files (no row — the
-    * conservative keep) and files whose filter might contain a probe.
-    * Driver traffic: zero — the bitsets deserialize and test inside the
-    * executors, exactly like [[bloomKeepFiles]], but the KEPT set stays
-    * distributed instead of the REJECTED set coming back.
+  /** One bloom sidecar applied distributed: keep the candidate files
+    * without an index row, those whose filter might contain a probe, and
+    * all of them where `skip` holds. The bitsets test inside executors,
+    * as in [[bloomKeepFiles]], but the KEPT set stays distributed.
     */
   private def bloomFilterDF(spark: SparkSession, root: String,
                             column: String, hashes: Array[Long],
-                            df: DataFrame): DataFrame = {
+                            df: DataFrame,
+                            skip: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions.{col, udf}
     val bloomDf = spark.read.schema(BloomSidecarSchema)
       .parquet(bloomDir(root, column).toString)
@@ -5107,7 +5112,7 @@ object TxLog {
       }
     }
     df.join(bloomDf, df("file") === col("__bloom_file"), "left_outer")
-      .filter(keepUdf(col("bloom")))
+      .filter(skip || keepUdf(col("bloom")))
       .drop("__bloom_file", "bloom")
   }
 

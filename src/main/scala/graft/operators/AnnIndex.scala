@@ -690,9 +690,7 @@ object AnnIndex {
       else cellList0
     val codes =
       if (cellList.isEmpty) TxLog.readLatest(spark, codesRoot(indexRoot))
-      else TxLog.readPrunedScan(spark, codesRoot(indexRoot),
-        bounds = Seq(("cell", cellList.head.toDouble,
-          cellList.last.toDouble)),
+      else TxLog.readPrunedScan(spark, codesRoot(indexRoot), Nil,
         equalities = Seq(("cell", cellList.toSeq)))
     // seam capture: lastStatsPrune = (stats-kept, total live),
     // lastBloomPrune = (bloom-kept, stats-survivors); -1 = unpruned read
@@ -730,8 +728,7 @@ object AnnIndex {
     lastSearchIO = Some(SearchIO(codesKept, codesTotal,
       if (rerankPruned) TxLog.lastBloomPrune.map(_._1).getOrElse(-1)
       else -1,
-      if (rerankPruned) TxLog.lastBloomPrune.map(_._2).getOrElse(-1)
-      else -1))
+      if (rerankPruned) corpusFiles else -1))
     val corpusEmb =
       normed(corpusScan, idCol, vecCol)
         .select(col("vec_id").as("cand_id"), col("embedding"),

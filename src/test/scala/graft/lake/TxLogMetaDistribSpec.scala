@@ -128,9 +128,12 @@ class TxLogMetaDistribSpec extends SparkSpec {
     TxLog.buildBloomIndex(spark, root, "k", expectedKeysPerFile = 1000L)
     TxLog.checkpoint(spark, root) shouldBe Some(3L)
     TxLog.lastBloomPrune = None
+    TxLog.lastStatsPrune = None
     val classic = TxLog.readEquals(spark, root, "k", Seq(217L))
       .collect().toSeq
     val classicPrune = TxLog.lastBloomPrune
+    val classicStats = TxLog.lastStatsPrune
+    TxLog.lastStatsPrune = None
     val dist = distributed {
       val r = TxLog.readEquals(spark, root, "k", Seq(217L)).collect().toSeq
       TxLog.lastResolveDistributed shouldBe true
@@ -138,12 +141,14 @@ class TxLogMetaDistribSpec extends SparkSpec {
     }
     dist shouldBe classic
     dist.map(_.getLong(0)) shouldBe Seq(217L)
-    // the point lookup scanned ~1 of 4 files (bloom false positives may
-    // keep an extra), never the whole set — and both tiers say so
+    // the point lookup scanned 1 of 4 files: the point set's stats test
+    // keeps only the file whose [min, max] holds 217 (so the bloom tier
+    // is skipped) — and both tiers say so
     TxLog.lastBloomPrune shouldBe classicPrune
-    val (kept, candidates) = TxLog.lastBloomPrune.get
-    candidates shouldBe 4
-    kept should be < 4
+    classicStats shouldBe Some((1, 4))
+    TxLog.lastStatsPrune shouldBe Some((1, 4))
+    val (kept, _) = TxLog.lastBloomPrune.get
+    kept shouldBe 1
     // the file count and the planned bytes are the same file selection
     val probe = Seq("k" -> Seq[Any](217L))
     val classicFiles = TxLog.bloomScanFileCount(spark, root, "k", Seq(217L))
